@@ -24,8 +24,22 @@ commit — made safe):
   :func:`reconcile_checkpoint` re-runs it for any committed run whose
   lineage row count trails its directory — the missing rows are appended,
   never the whole run twice;
-* crash AFTER lineage commit → the resume anti-join sees the docs as
+* crash AFTER the lineage commit but BEFORE the commit marker (below) →
+  the run is unmarked, so the next reconcile recounts it once, finds its
+  lineage complete and writes the marker — one recount, never a skipped
+  heal;
+* crash AFTER the marker → the resume anti-join sees the docs as
   committed; the job writes nothing new.
+
+Commit markers: once a run's lineage is known complete,
+:func:`write_checkpoint` writes a zero-byte ``checkpoint/_committed/<run_id>``
+file, and :func:`reconcile_checkpoint` drops every marked run before it
+reads lineage — a resume or retry over N fully committed runs is one
+directory listing and launches no Spark job. The markers live under the
+lineage directory so that anything which removes or rewrites lineage drops
+them too, and the leading ``_`` hides them from Spark's parquet listing.
+Runs committed before markers existed are counted once, as before, and
+then marked.
 
 Per-commit cost is O(this run's output) — the previous protocol re-scanned
 the entire spans table (all runs ever written) on every commit, which is
@@ -38,7 +52,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from typing import List, Optional
+from typing import List, Optional, Set
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +61,7 @@ from pdf_extractor_spark.schema import CHECKPOINT_SCHEMA
 
 CHECKPOINT_DIR = "checkpoint"
 SPANS_DIR = "spans"
+COMMITTED_DIR = "_committed"
 
 
 def checkpoint_path(output_dir: str) -> str:
@@ -59,6 +74,25 @@ def spans_path(output_dir: str, table: str = SPANS_DIR) -> str:
 
 def spans_run_path(output_dir: str, run_id: str, table: str = SPANS_DIR) -> str:
     return os.path.join(spans_path(output_dir, table), f"run_id={run_id}")
+
+
+def committed_marker_path(output_dir: str, run_id: str) -> str:
+    return os.path.join(checkpoint_path(output_dir), COMMITTED_DIR, run_id)
+
+
+def _mark_committed(output_dir: str, run_id: str) -> None:
+    """Record that ``run_id``'s lineage is complete (zero-byte marker)."""
+    path = committed_marker_path(output_dir, run_id)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    open(path, "wb").close()
+
+
+def _marked_runs(output_dir: str) -> Set[str]:
+    marker_dir = os.path.join(checkpoint_path(output_dir), COMMITTED_DIR)
+    try:
+        return set(os.listdir(marker_dir))
+    except FileNotFoundError:
+        return set()
 
 
 def read_checkpoint(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
@@ -125,6 +159,7 @@ def write_checkpoint(
             already_n = already.count()  # retry path only; ckpt is small
             lineage = lineage.join(already, "doc_id", "left_anti")
             if lineage.isEmpty():
+                _mark_committed(output_dir, run_id)
                 return spark.read.parquet(run_path).count()
     # the commit count rides the lineage write itself (observe) — the old
     # `read.parquet(run_path).count()` re-scanned the just-written output a
@@ -155,6 +190,7 @@ def write_checkpoint(
         except OSError:
             pass  # permission/race on the listing — keep natural partitioning
     lineage.write.mode("append").parquet(checkpoint_path(output_dir))
+    _mark_committed(output_dir, run_id)
     return int(obs.get["n"]) + already_n
 
 
@@ -176,6 +212,8 @@ def reconcile_checkpoint(
 
     Returns the run_ids whose durable-but-uncommitted spans were adopted
     into lineage. Partial (no ``_SUCCESS``) run directories are removed.
+    Runs with a commit marker are skipped unread; when every run is
+    marked, no Spark job is launched.
 
     ``run_ids`` restricts the sweep to the named runs: a long-lived stream
     reconciles everything ONCE at start, then only its current batch-run
@@ -186,6 +224,8 @@ def reconcile_checkpoint(
     if run_ids is not None:
         wanted = set(run_ids)
         runs = [r for r in runs if r in wanted]
+    marked = _marked_runs(output_dir)
+    runs = [r for r in runs if r not in marked]
     if not runs:
         return adopted
     ckpt = read_checkpoint(spark, output_dir)
@@ -208,11 +248,14 @@ def reconcile_checkpoint(
             # those (write_checkpoint anti-joins), else a resume would
             # re-extract them under a new run_id and duplicate their rows.
             # Parquet metadata makes the directory count a footer read.
-            if has_success and (
-                spark.read.parquet(run_path).count() > committed[rid]
-            ):
-                write_checkpoint(spark, output_dir, rid, table)
-                adopted.append(rid)
+            # A complete but unmarked run (crash after the lineage append,
+            # before the marker, or lineage older than markers) is marked.
+            if has_success:
+                if spark.read.parquet(run_path).count() > committed[rid]:
+                    write_checkpoint(spark, output_dir, rid, table)
+                    adopted.append(rid)
+                else:
+                    _mark_committed(output_dir, rid)
             continue
         if has_success:
             write_checkpoint(spark, output_dir, rid, table)
@@ -220,14 +263,3 @@ def reconcile_checkpoint(
         else:
             shutil.rmtree(run_path, ignore_errors=True)
     return adopted
-
-
-def run_metrics(checkpoint: DataFrame) -> DataFrame:
-    """A3/A5 analog: per-run counters from lineage (docs, spans, partitions)."""
-    return checkpoint.groupBy("run_id").agg(
-        F.count("*").alias("docs"),
-        F.sum("span_count").alias("total_spans"),
-        F.countDistinct("partition_id").alias("partitions"),
-        F.min("committed_at").alias("started_at"),
-        F.max("committed_at").alias("finished_at"),
-    )

@@ -3,18 +3,21 @@ CLI batch job, `/root/reference/batch_extract.py` + `extractor.py:871-988`).
 
 Stages (all DataFrame-declarative; Catalyst owns pushdown/pruning/joins):
 
-  read docs → anti-join checkpoint (resume, P5/ST4) → dedup by sha2 (O3)
-    → size-bucket + salt repartition (O9, skew) → tokenize (Arrow kernel)
-    → assemble (codegen) → [field extraction vs broadcast KB]
-    → write spans + per-partition lineage/metrics (ST3/S8)
+  read docs → reconcile + anti-join checkpoint (resume, P5/ST4)
+    → tokenize + assemble (one fused Arrow kernel)
+    → [field extraction vs broadcast KB]
+    → write spans + lineage columns (ST3/S8) → commit lineage + marker
 
-Scale notes (100 TB / 10^12 docs):
-  * Dedup-before-compute is the dominant saving (the reference computes each
-    distinct document once via its hash caches, extractor.py:72-81,883-886);
-    here it is a shuffle on sha2(content) — the *only* wide dependency in the
-    pipeline; everything downstream is narrow.
-  * Skew: multi-MB PDFs are salted into size buckets before the Arrow kernel
-    so one fat partition cannot stall a stage (north_rule).
+Plans (``extract_spans(dedup=...)``):
+  * ``"narrow"`` (default): the kernel runs straight off the scan — no
+    shuffle at all. Duplicates are re-tokenized; scan splits
+    (``spark.sql.files.maxPartitionBytes``) are the only sizing, so there
+    is no size bucketing of fat documents.
+  * ``"wide"``: dedup-before-compute (O3; the reference computes each
+    distinct document once via its hash caches, extractor.py:72-81,883-886)
+    — one exchange on sha2(content) that both spreads megabyte documents
+    uniformly (``skew_repartition``) and groups duplicates
+    (``dedup_with_lineage``); everything downstream is narrow.
   * Resume: a left-anti join against the checkpoint table keyed on doc_id —
     at scale this is a broadcast-able or bucketed join on the checkpoint side.
 """
@@ -119,12 +122,6 @@ def skew_repartition(df: DataFrame, partitions: int) -> DataFrame:
     (7.7s vs 4.3s on the 20k-doc corpus), so the plain uniform key wins.
     Deterministic — no clock or rand involved."""
     return df.repartition(partitions, F.col("content_hash"))
-
-
-def dedup_by_hash(df: DataFrame) -> DataFrame:
-    """O3: compute once per distinct content (the reference's pdf_cache,
-    extractor.py:883-886). Returns representative rows."""
-    return df.dropDuplicates(["content_hash"])
 
 
 def dedup_with_lineage(df: DataFrame, content_col: str = "content") -> DataFrame:

@@ -2968,24 +2968,33 @@ def _stream_curation_sql() -> str:
 
 
 def _fresh_stream_dir(prefix: str) -> str:
-    """Fresh tmp dir for a one-shot stream run, sweeping prior runs' dirs
-    older than 30 min (each invocation needs a fresh checkpoint — resumed
-    state would dedup across driver re-runs and change the result; the
-    returned DataFrame lazily reads the new dir, so cleanup of THIS dir
-    can only happen on a later call)."""
+    """Fresh tmp dir ``<prefix><pid>_*`` for a one-shot stream run (each
+    invocation needs a fresh checkpoint — resumed state would dedup across
+    re-runs and change the result).
+
+    The returned DataFrame lazily reads the new dir for as long as the
+    session lives, so a dir is swept only once its owner process is gone —
+    never by age, which would delete the dir an earlier call in the same
+    long-lived session still reads."""
     import glob as _glob
     import shutil as _shutil
     import tempfile as _tempfile
-    import time as _time
 
-    cutoff = _time.time() - 1800
-    for old in _glob.glob(os.path.join(_tempfile.gettempdir(), prefix + "*")):
-        try:
-            if os.path.getmtime(old) < cutoff:
-                _shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    return _tempfile.mkdtemp(prefix=prefix)
+    for old in _glob.glob(os.path.join(_tempfile.gettempdir(), prefix + "*_*")):
+        pid = os.path.basename(old)[len(prefix):].split("_", 1)[0]
+        if pid.isdigit() and not _pid_alive(int(pid)):
+            _shutil.rmtree(old, ignore_errors=True)
+    return _tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # exists, owned by another user
+    return True
 
 
 _STREAM_STATEFUL_SQL = """

@@ -72,11 +72,10 @@ def run_stream_extraction(
     stream = read_doc_stream(spark, input_path, max_files_per_trigger)
 
     # full reconcile ONCE at stream start: adopt/heal anything a previous
-    # stream or batch job left torn. Inside each trigger only the current
-    # batch-run is reconciled — a foreachBatch retry can only have torn its
-    # OWN run dir, and sweeping every run dir (each a Spark count job) plus
-    # a full-lineage aggregate per micro-batch degrades to O(batches²) jobs
-    # over a long-lived stream's life.
+    # stream or batch job left torn. Runs with a commit marker are skipped
+    # without a Spark job; each unmarked run costs a full-lineage aggregate
+    # plus a count job. Inside each trigger only the current batch-run is
+    # reconciled — a foreachBatch retry can only have torn its OWN run dir.
     reconcile_checkpoint(spark, output_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

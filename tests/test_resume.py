@@ -225,3 +225,97 @@ def test_general_corpus_docs_flow_through_distributed_pipeline(spark, tmp_path):
     assert "你好" in "".join(got["cjk.pdf"]["texts"])
     assert got["enc.pdf"]["span_count"] == 1 and len(got["enc.pdf"]["unp"]) == 1
     assert any("hello" in t for t in got["plain.pdf"]["texts"])
+
+
+def _commit_runs(spark, tmp_path, n_runs, docs_per_run=10):
+    """Commit ``n_runs`` disjoint shards of one corpus as runs r0..r{n-1};
+    returns (docs_path, out_dir)."""
+    docs_path = str(tmp_path / "docs")
+    generate_corpus(spark, n_runs * docs_per_run, partitions=2).write.parquet(
+        docs_path
+    )
+    out_dir = str(tmp_path / "out")
+    for i in range(n_runs):
+        shard = str(tmp_path / f"shard{i}")
+        spark.read.parquet(docs_path).where(
+            (F.col("doc_id") >= f"doc_{i * docs_per_run:09d}")
+            & (F.col("doc_id") < f"doc_{(i + 1) * docs_per_run:09d}")
+        ).write.parquet(shard)
+        s = run_extraction_job(spark, shard, out_dir, run_id=f"r{i}", partitions=2)
+        assert s["docs"] == docs_per_run
+    return docs_path, out_dir
+
+
+def _jobs_under_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_crash_after_lineage_before_marker_recounts_once(spark, tmp_path):
+    """Crash between the lineage append and the commit marker: the resume
+    recounts the run, finds its lineage complete, restores the marker and
+    neither re-extracts nor re-appends anything."""
+    from pdf_extractor_spark.checkpoint import (
+        committed_marker_path, read_checkpoint,
+    )
+
+    docs_path = str(tmp_path / "docs")
+    generate_corpus(spark, 30, partitions=2).write.parquet(docs_path)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    marker = committed_marker_path(out_dir, "r1")
+    assert os.path.isfile(marker) and os.path.getsize(marker) == 0
+
+    os.remove(marker)  # the crash: lineage durable, marker never written
+
+    s2 = run_extraction_job(spark, docs_path, out_dir, run_id="r2", partitions=2)
+    assert s2["docs"] == 0
+    assert not os.path.isdir(os.path.join(out_dir, "spans", "run_id=r2"))
+    ckpt = read_checkpoint(spark, out_dir)
+    assert ckpt.count() == 30
+    assert ckpt.select("doc_id").distinct().count() == 30
+    spans = spark.read.parquet(os.path.join(out_dir, "spans"))
+    assert spans.count() == 30
+    assert spans.select("doc_id").distinct().count() == 30
+    assert os.path.isfile(marker)
+
+
+def test_steady_state_reconcile_launches_no_spark_job(spark, tmp_path):
+    """With every run marked, reconcile is a directory listing: no Spark
+    job, however many runs are committed. An unmarked run is recounted
+    (jobs launched) and marked, after which reconcile is job-free again."""
+    from pdf_extractor_spark.checkpoint import (
+        committed_marker_path, reconcile_checkpoint,
+    )
+
+    _, out_dir = _commit_runs(spark, tmp_path, 3)
+
+    def reconcile():
+        assert reconcile_checkpoint(spark, out_dir) == []
+
+    assert _jobs_under_group(spark, "reconcile-marked", reconcile) == []
+
+    os.remove(committed_marker_path(out_dir, "r1"))
+    assert _jobs_under_group(spark, "reconcile-unmarked", reconcile) != []
+    assert os.path.isfile(committed_marker_path(out_dir, "r1"))
+    assert _jobs_under_group(spark, "reconcile-remarked", reconcile) == []
+
+
+def test_commit_markers_invisible_to_lineage_readers(spark, tmp_path):
+    """The ``_committed`` marker dir under the lineage table is hidden from
+    Spark's parquet listing: every reader sees exactly the committed rows."""
+    from pdf_extractor_spark.checkpoint import (
+        checkpoint_path, committed_marker_path, read_checkpoint,
+    )
+
+    _, out_dir = _commit_runs(spark, tmp_path, 3)
+    assert all(
+        os.path.isfile(committed_marker_path(out_dir, f"r{i}")) for i in range(3)
+    )
+    assert read_checkpoint(spark, out_dir).count() == 30
+    assert spark.read.parquet(checkpoint_path(out_dir)).count() == 30

@@ -196,3 +196,28 @@ def test_stream_stateful_batch_entry_dedups_replay(spark, sf_dir):
     )
     assert win.agg(F.max(F.col("k1").cast("long"))).collect()[0][0] + 300 <= mx - 600
     out.unpersist()
+
+
+def test_fresh_stream_dir_sweeps_only_dead_owners(tmp_path, monkeypatch):
+    """Two calls in one process never delete each other's dir, however old
+    it is (an earlier call's DataFrame may still read it); a dir whose
+    owner process has exited is swept."""
+    import subprocess
+    import sys
+    import tempfile
+
+    from pdf_extractor_spark.pipeline_queries import _fresh_stream_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    proc.wait()
+    dead = tmp_path / f"stream_t_{proc.pid}_x"
+    dead.mkdir()
+
+    first = _fresh_stream_dir("stream_t_")
+    os.utime(first, (0, 0))  # far older than any age cutoff
+    second = _fresh_stream_dir("stream_t_")
+    assert first != second
+    assert os.path.isdir(first) and os.path.isdir(second)
+    assert os.path.basename(first).startswith(f"stream_t_{os.getpid()}_")
+    assert not dead.exists()
