@@ -18,12 +18,6 @@ from html import unescape
 from html.parser import HTMLParser
 from typing import Any, Dict, List, Optional
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-
-from pdf_extractor_spark.schema import TOKENIZED_STRUCT
-
 # Elements that delimit text blocks (block-level boundaries).
 _BLOCK_TAGS = {
     "p", "div", "section", "article", "main", "header", "footer", "aside",
@@ -397,15 +391,3 @@ def tokenize_html(data: Any, fast: bool = True) -> Dict[str, Any]:
             }
         )
     return {"page_width": 0.0, "page_height": 0.0, "spans": spans}
-
-
-@pandas_udf(TOKENIZED_STRUCT)
-def tokenize_html_udf(content: pd.Series) -> pd.DataFrame:
-    rows = [tokenize_html(b) for b in content]
-    return pd.DataFrame(
-        {
-            "page_width": [r["page_width"] for r in rows],
-            "page_height": [r["page_height"] for r in rows],
-            "spans": [r["spans"] for r in rows],
-        }
-    )

@@ -20,8 +20,8 @@ ref-to-array-object). Unsupported constructs degrade gracefully (span list
 may be partial; never raises).
 
 This module is deliberately free of any Spark import so it can run inside
-Arrow ``pandas_udf`` batches (see :mod:`pdf_extractor_spark.pdf.udf`) and in
-plain unit tests.
+the Arrow ``pandas_udf`` kernel (see :mod:`pdf_extractor_spark.tokenize_dispatch`)
+and in plain unit tests.
 """
 
 from __future__ import annotations

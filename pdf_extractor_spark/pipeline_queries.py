@@ -2480,8 +2480,14 @@ _PACK_SHARDS = 8    # pack within (source, shard); raise with corpus size
 # (SPARK_GRAFT_PACK_SHUFFLE=raw — 2.3x fewer shuffle bytes at the cost of
 # tokenizing twice; the right setting when shuffle bytes traverse a real
 # cluster NIC/disk). A/B tables in BENCH/NOTES.md "pack_write shuffle
-# payload (round 5)".
-_PACK_SHUFFLE_RAW = os.environ.get("SPARK_GRAFT_PACK_SHUFFLE", "array") == "raw"
+# payload (round 5)". The variable is read at each call; this constant is
+# the payload used while it is unset.
+_PACK_SHUFFLE_RAW = False
+
+
+def _pack_shuffle_raw() -> bool:
+    mode = os.environ.get("SPARK_GRAFT_PACK_SHUFFLE")
+    return _PACK_SHUFFLE_RAW if mode is None else mode == "raw"
 
 
 @register(
@@ -2604,7 +2610,7 @@ def corpus_pack_write(spark, sf_dir):
     second shuffle: its keys (source, shard, chunk_id) are a superset of
     the window's partitioning, so every chunk group is already co-located
     (EXPLAIN.md: Window → Generate → ObjectHashAggregate with a single
-    Exchange). The exchange PAYLOAD is switchable (_PACK_SHUFFLE_RAW):
+    Exchange). The exchange PAYLOAD is switchable (_pack_shuffle_raw):
     token array (default, single-box wall winner) vs raw string (2.3x
     fewer shuffle bytes — set SPARK_GRAFT_PACK_SHUFFLE=raw when the
     shuffle crosses a real cluster's NIC/disk). The boundary cut (lo/hi + slice) is narrow, the chunk
@@ -2615,7 +2621,8 @@ def corpus_pack_write(spark, sf_dir):
     docs) never emit."""
     d = t(spark, sf_dir, "documents")
     tok_expr = "filter(split(lower(coalesce(text, '')), ' '), w -> w != '')"
-    if _PACK_SHUFFLE_RAW:
+    raw = _pack_shuffle_raw()
+    if raw:
         # shuffle the RAW text string, not the token array: a Tungsten
         # array<string> row costs ~8 B of offset/size per element on top
         # of the bytes, vs ~1 B/token of separators in the raw string —
@@ -2648,7 +2655,7 @@ def corpus_pack_write(spark, sf_dir):
     c = toks.withColumn(
         "cum_before", F.coalesce(F.sum("n_tok").over(w), F.lit(0)).cast("bigint")
     )
-    if _PACK_SHUFFLE_RAW:
+    if raw:
         c = c.withColumn("l", F.expr(tok_expr)).drop("text")
     B = _PACK_BUDGET
     pieces = c.select(

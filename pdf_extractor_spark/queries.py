@@ -22,21 +22,11 @@ from pyspark.sql.window import Window
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: Dict[str, Tuple[QueryFn, str]] = {}
-_NO_ORACLE: Dict[str, QueryFn] = {}
 
 
 def register(name: str, sql: str):
     def deco(fn: QueryFn) -> QueryFn:
         _REGISTRY[name] = (fn, sql)
-        return fn
-    return deco
-
-
-def register_rows_only(name: str):
-    """Ops with no faithful single-statement SQL equivalent (driver records a
-    weaker rows-only check)."""
-    def deco(fn: QueryFn) -> QueryFn:
-        _NO_ORACLE[name] = fn
         return fn
     return deco
 
@@ -61,7 +51,7 @@ _PRIORITY = [
     "corpus_curation_record",
     "mm_media_pipeline",     # decode + frame-sample UDTF shapes
     "a4_kb_stats",
-    "sim_ann_lsh_topk",      # rows-only: recall-tested ANN
+    "sim_ann_lsh_topk",
     "sim_ann_ivf_topk",
 ]
 
@@ -72,9 +62,7 @@ def _ordered(names) -> list:
 
 
 def all_queries() -> Dict[str, QueryFn]:
-    merged = {k: v[0] for k, v in _REGISTRY.items()}
-    merged.update(_NO_ORACLE)
-    return {k: merged[k] for k in _ordered(merged)}
+    return {k: _REGISTRY[k][0] for k in _ordered(_REGISTRY)}
 
 
 def all_oracles() -> Dict[str, str]:

@@ -66,16 +66,6 @@ GEO_SPAN_STRUCT = StructType(
 
 GEO_SPANS_TYPE = ArrayType(GEO_SPAN_STRUCT)
 
-# Tokenizer output: spans + page box (needed by directional anchor windows —
-# reference uses page.rect, extractor.py:211).
-TOKENIZED_STRUCT = StructType(
-    [
-        StructField("page_width", FloatType()),
-        StructField("page_height", FloatType()),
-        StructField("spans", GEO_SPANS_TYPE),
-    ]
-)
-
 # Fused kernel output: spans already reading-order-sorted with offsets
 # assigned, plus the truncated full text (see tokenize_dispatch.assemble_doc).
 ASSEMBLED_STRUCT = StructType(

@@ -36,11 +36,7 @@ from typing import Any, Dict, List
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
-from pdf_extractor_spark.schema import (
-    ASSEMBLED_PUBLIC_STRUCT,
-    ASSEMBLED_STRUCT,
-    TOKENIZED_STRUCT,
-)
+from pdf_extractor_spark.schema import ASSEMBLED_PUBLIC_STRUCT, ASSEMBLED_STRUCT
 from pdf_extractor_spark.pdf.tokenizer import tokenize_pdf
 from pdf_extractor_spark.html.boilerplate import tokenize_html
 from pdf_extractor_spark.assemble import TRUNCATE_SENTINEL, TRUNCATE_WORDS
@@ -148,18 +144,6 @@ def assemble_doc(tok: Dict[str, Any]) -> Dict[str, Any]:
         "spans": spans,
         "full_text": full_text,
     }
-
-
-@pandas_udf(TOKENIZED_STRUCT)
-def tokenize_any_udf(content: pd.Series) -> pd.DataFrame:
-    rows = [tokenize_any(b) for b in content]
-    return pd.DataFrame(
-        {
-            "page_width": [r["page_width"] for r in rows],
-            "page_height": [r["page_height"] for r in rows],
-            "spans": [r["spans"] for r in rows],
-        }
-    )
 
 
 @pandas_udf(ASSEMBLED_STRUCT)

@@ -592,3 +592,26 @@ def test_pack_write_payload_modes_identical(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", True)
     raw_form = run()
     assert array_form == raw_form and array_form
+
+
+def test_pack_shuffle_env_read_at_call_time(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_PACK_SHUFFLE set after the module is imported still
+    switches corpus_pack_write to the raw-string exchange payload."""
+    import re
+
+    import pdf_extractor_spark.pipeline_queries as pq
+
+    def plan():
+        qe = pq.corpus_pack_write(spark, sf_dir)._jdf.queryExecution()
+        return re.sub(r"#\d+|\bx_\d+", "", qe.optimizedPlan().toString())
+
+    monkeypatch.delenv("SPARK_GRAFT_PACK_SHUFFLE", raising=False)
+    array_plan = plan()
+    monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", True)
+    raw_plan = plan()
+    assert raw_plan != array_plan
+    monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", False)
+    monkeypatch.setenv("SPARK_GRAFT_PACK_SHUFFLE", "raw")
+    assert plan() == raw_plan
+    monkeypatch.setenv("SPARK_GRAFT_PACK_SHUFFLE", "array")
+    assert plan() == array_plan
