@@ -1,9 +1,13 @@
 """Scalar text functions — pure Column expressions (JVM-side, codegen'd).
 
-Each function re-expresses a reference scalar (SURVEY.md §2.8) with built-in
-``pyspark.sql.functions`` so the hot path never leaves whole-stage codegen.
-Python twins used inside the per-document Arrow kernel live in
-:mod:`pdf_extractor_spark.extract.engine`; tests assert the two agree.
+Two reference scalars (SURVEY.md §2.8) re-expressed with built-in
+``pyspark.sql.functions`` so they never leave whole-stage codegen:
+``normalize_text`` (F1) and ``collapse_newlines`` (F3). The
+``f1_normalize_text`` registry entry is built from both, and its oracle SQL
+reuses the accent tables below. The Python twin used inside the
+per-document Arrow kernel is
+:func:`pdf_extractor_spark.extract.engine.normalize_text`; a test asserts
+the two agree.
 """
 
 from __future__ import annotations
@@ -12,78 +16,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # F1 — accent folding + lowercase + strip [\s_:]
-# (reference: /root/reference/extractor.py:146-155)
-_ACCENTS_SRC = "áàâãéêíóôõúçÁÀÂÃÉÊÍÓÔÕÚÇ"
-_ACCENTS_DST = "aaaaeeioooucAAAAEEIOOOUC"
+# (reference extractor.py:146-155)
+ACCENTS_SRC = "áàâãéêíóôõúçÁÀÂÃÉÊÍÓÔÕÚÇ"
+ACCENTS_DST = "aaaaeeioooucAAAAEEIOOOUC"
 
 
 def normalize_text(col: Column) -> Column:
     """Accent-fold (a/e/i/o/u/c groups), lowercase, remove all ``\\s _ :``."""
-    folded = F.translate(col, _ACCENTS_SRC, _ACCENTS_DST)
+    folded = F.translate(col, ACCENTS_SRC, ACCENTS_DST)
     return F.regexp_replace(F.lower(folded), r"[\s_:]+", "")
 
 
 # F3 — newline collapse for presentation (extractor.py:635,975)
 def collapse_newlines(col: Column) -> Column:
     return F.regexp_replace(col, r"\s*\n\s*", ", ")
-
-
-# F2 — value-shape → regex classification (extractor.py:457-483)
-CPF_RE = r"\d{3}\.\d{3}\.\d{3}-\d{2}"
-CNPJ_RE = r"\d{2}\.\d{3}\.\d{3}/\d{4}-\d{2}"
-DATE_RE = r"\d{2}/\d{2}/\d{4}"
-CEP_RE = r"\d{5}-\d{3}"
-DIGITS_RE = r"\d+"
-MONEY_RE = r"[\d\.,]+"
-
-
-def guess_regex(col: Column) -> Column:
-    """Return the regex pattern string for a value's shape, or NULL.
-
-    Mirrors the reference's ordered fullmatch chain, including the money
-    branch's ``.``/``,`` requirement (extractor.py:478-481)."""
-    full = lambda pat: col.rlike(f"^(?:{pat})$")  # noqa: E731
-    money_shape = full(r"R\$\s*[\d\.,]+") | full(MONEY_RE)
-    has_sep = col.contains(".") | col.contains(",")
-    return (
-        F.when(full(CPF_RE), F.lit(CPF_RE))
-        .when(full(CNPJ_RE), F.lit(CNPJ_RE))
-        .when(full(DATE_RE), F.lit(DATE_RE))
-        .when(full(CEP_RE), F.lit(CEP_RE))
-        .when(full(DIGITS_RE), F.lit(DIGITS_RE))
-        .when(money_shape & has_sep, F.lit(MONEY_RE))
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
-# P3 — regex value filter: first match or NULL (extractor.py:277-280)
-def regex_extract_or_null(col: Column, pattern: Column) -> Column:
-    extracted = F.when(
-        pattern.isNotNull(), F.regexp_extract(col, pattern, 0)
-    ).otherwise(col)
-    return F.when(F.length(extracted) > 0, extracted)
-
-
-# F4 — rstrip of ' ' and ':' (extractor.py:520,531 ``.rstrip(' :')``)
-def rstrip_space_colon(col: Column) -> Column:
-    return F.regexp_replace(col, r"[ :]+$", "")
-
-
-# E1 — anchor candidate variants (extractor.py:372-375)
-def anchor_candidates(field: Column, description: Column) -> Column:
-    spaced = F.replace(field, F.lit("_"), F.lit(" "))
-    return F.array_distinct(
-        F.array(
-            field,
-            spaced,
-            F.initcap(spaced),
-            F.upper(field),
-            description,
-            F.upper(description),
-        )
-    )
-
-
-# 'null' string → real NULL, applied once at ingestion (extractor.py:619,728)
-def null_literal_to_null(col: Column) -> Column:
-    return F.when(F.lower(col) != "null", col)

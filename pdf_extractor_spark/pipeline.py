@@ -383,8 +383,7 @@ def run_extraction_job(
 ) -> dict:
     """Read a RAW_DOC parquet table, extract spans, write spans + checkpoint.
 
-    Output layout (Iceberg-shaped parquet; catalog wiring is a config flag
-    when an Iceberg runtime is present):
+    Output layout (plain parquet directories; no table catalog is wired):
       {output_dir}/spans/run_id=<id>/   doc_id, spans (public contract),
                                         partition_id of the writing task
       {output_dir}/checkpoint/          CHECKPOINT_SCHEMA rows, one per doc

@@ -19,6 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pdf_extractor_spark.functions.text import (
+    ACCENTS_DST,
+    ACCENTS_SRC,
+    collapse_newlines,
+    normalize_text,
+)
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: Dict[str, Tuple[QueryFn, str]] = {}
@@ -89,15 +96,11 @@ def s2_content_hash(spark, sf_dir):
 # §2.8 scalar functions
 # ---------------------------------------------------------------------------
 
-_ACCENTS_SRC = "áàâãéêíóôõúçÁÀÂÃÉÊÍÓÔÕÚÇ"
-_ACCENTS_DST = "aaaaeeioooucAAAAEEIOOOUC"
-
-
 @register(
     "f1_normalize_text",
     f"""SELECT doc_id,
         regexp_replace(lower(translate(substr(text, 1, 120),
-            '{_ACCENTS_SRC}', '{_ACCENTS_DST}')), '[\\s_:]+', '', 'g')
+            '{ACCENTS_SRC}', '{ACCENTS_DST}')), '[\\s_:]+', '', 'g')
         AS norm,
         regexp_replace(replace(substr(text, 1, 200), '. ', chr(10)),
                       '\\s*\\n\\s*', ', ', 'g') AS cleaned
@@ -110,12 +113,11 @@ def f1_normalize_text(spark, sf_dir):
     strip (extractor.py:146-155). `cleaned`: the ', ' newline-collapse
     presentation contract (extractor.py:975)."""
     d = t(spark, sf_dir, "documents")
-    folded = F.translate(F.substring("text", 1, 120), _ACCENTS_SRC, _ACCENTS_DST)
     with_nl = F.replace(F.substring("text", 1, 200), F.lit(". "), F.lit("\n"))
     return d.select(
         "doc_id",
-        F.regexp_replace(F.lower(folded), r"[\s_:]+", "").alias("norm"),
-        F.regexp_replace(with_nl, r"\s*\n\s*", ", ").alias("cleaned"),
+        normalize_text(F.substring("text", 1, 120)).alias("norm"),
+        collapse_newlines(with_nl).alias("cleaned"),
     )
 
 

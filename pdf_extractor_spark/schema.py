@@ -40,13 +40,6 @@ SPAN_STRUCT = StructType(
 
 SPANS_TYPE = ArrayType(SPAN_STRUCT)
 
-DOC_SPANS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", SPANS_TYPE),
-    ]
-)
-
 # Internal variant carrying geometry (PDF user space, origin bottom-left) and
 # font size; used between the tokenizer and the extraction kernel, dropped in
 # the public output.
@@ -142,16 +135,5 @@ METRICS_SCHEMA = StructType(
         StructField("run_id", StringType()),
         StructField("metric", StringType()),
         StructField("value", DoubleType()),
-    ]
-)
-
-# Extraction result: doc_id + map<field, value> (reference result dict,
-# extractor.py:964-977).
-RESULT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("label", StringType()),
-        StructField("result", MapType(StringType(), StringType())),
-        StructField("failed_fields", ArrayType(StringType())),
     ]
 )

@@ -18,8 +18,8 @@ Two checkpoint layers cooperate:
   and streaming runs share one resume/metrics protocol (ST3/S8) and a batch
   job can take over where a stream stopped, or vice versa.
 
-At 100 TB the source would be an Iceberg streaming read; in the sandbox it's
-the parquet file source with the same schema. Late data / watermarks are N/A
+The source is the parquet file source over the RAW_DOC schema; no table
+catalog (Iceberg or otherwise) is wired. Late data / watermarks are N/A
 by design — each document is independent (no event-time aggregation), which
 mirrors the reference's per-document semantics.
 """

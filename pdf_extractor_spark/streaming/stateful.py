@@ -171,15 +171,6 @@ def run_doc_dedup_stream(
     return q
 
 
-WINDOW_COUNTS_SCHEMA = StructType(
-    [
-        StructField("window_start", LongType()),
-        StructField("event_type", StringType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
 def windowed_event_counts(events: DataFrame,
                           window: str = "5 minutes",
                           watermark: str = "10 minutes") -> DataFrame:

@@ -1,125 +1,358 @@
 #!/usr/bin/env python
-"""Scaling-efficiency evidence for the north_rule (N vs 4N).
+"""N-vs-4N scaling harness: one job at several core counts, one row per run.
 
-No multi-node cluster exists in this sandbox, so the rule's two-cluster-size
-criterion is evidenced by running the *identical* extraction job on the
-*identical* synthetic corpus at two parallelism levels — each leg in its own
-fresh JVM with the WHOLE process tree (JVM + Python workers) pinned via
-``taskset`` to exactly that many cores (local[N] alone lets Python workers
-spill onto extra cores, overstating the small leg).
+No multi-node cluster is needed: the identical job runs on the identical
+deterministic corpus once per leg, each leg in fresh processes whose WHOLE
+tree (JVM, GC threads, Python workers) is pinned by ``taskset`` to exactly
+that many cores (``local[N]`` alone lets Python workers spill onto extra
+cores, overstating the small leg).
 
-Every leg measurement is appended to BENCH/runs.jsonl; BENCH/BASELINE.md is
-regenerated from the best recorded run per core count, reporting efficiency
-for every 4x octave present.
+  --job extract       run_extraction_job over the synthetic interleaved
+                      PDF/HTML corpus (bench.ensure_corpus)
+  --job curation      corpus_curation_record over a pure-SQL synthetic
+                      documents table (gen_documents)
+  --shape threads     one pinned local[N] JVM per leg
+  --shape executors   spark-submit --py-files engine.zip --master
+                      local-cluster[E,C,mem]: E = N / C real executor JVMs,
+                      each with its own heap, GC and Python workers
 
-  SCALING_LEGS="8,32" SCALING_N_DOCS=2000000 python tools/scaling_bench.py
-  SCALING_LEGS="4,16" python tools/scaling_bench.py   # unsaturated octave
+Every leg is timed inside its own process (JVM and executor spin-up
+excluded) and appended as one row to BENCH/runs.jsonl (extract, threads),
+BENCH/cluster_runs.jsonl (extract, executors) or BENCH/curation_runs.jsonl
+(curation). Rows carry job, shape, sweep_id, git_sha, nproc and the 1-min
+loadavg sampled just before the leg. After the sweep the harness prints one
+JSON summary of the sweep (best row per leg, grouped by sweep_id) and
+regenerates BENCH/BASELINE.md from BENCH/runs.jsonl and
+BENCH/cluster_runs.jsonl.
+
+Old commands and settings map to flags as follows (--legs now always counts
+total cores):
+
+  SCALING_LEGS=8,32 SCALING_N_DOCS=N SCALING_REPEATS=R scaling_bench.py
+      -> --job extract --shape threads --legs 8,32 --n-docs N --repeats R
+  CLUSTER_LEGS=1,2,4,8 CLUSTER_CORES_PER_EXEC=4 CLUSTER_N_DOCS=N
+  CLUSTER_REPEATS=R cluster_scaling.py
+      -> --job extract --shape executors --legs 4,8,16,32
+         --cores-per-executor 4 --n-docs N --repeats R
+         (R submits of one timed job each, was one submit of R jobs)
+  CLUSTER_EXEC_MEM_MB -> the EXEC_MEM_MB constant below
+  SPARK_GRAFT_CURATION_LEGS=8,32 SPARK_GRAFT_CURATION_DOCS=N
+  curation_scaling.py [--cluster] [--dup-mod D] [--unhinted]
+      -> --job curation --shape threads|executors --legs 8,32 --n-docs N
+         [--dup-mod D] [--unhinted]
+  SPARK_GRAFT_CURATION_SP=S -> --shuffle-partitions S
+  SPARK_GRAFT_CURATION_CACHE -> $SPARK_GRAFT_CORPUS_CACHE/curation
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import multiprocessing
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
+import time
+from concurrent.futures import ProcessPoolExecutor
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-N_DOCS = int(os.environ.get("SCALING_N_DOCS", "2000000"))
-REPEATS = int(os.environ.get("SCALING_REPEATS", "2"))
-LEGS = [int(x) for x in os.environ.get("SCALING_LEGS", "8,32").split(",")]
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402  (corpus cache, split sizing, loadavg)
+
 RUNS_PATH = os.path.join(REPO, "BENCH", "runs.jsonl")
+CLUSTER_RUNS_PATH = os.path.join(REPO, "BENCH", "cluster_runs.jsonl")
+CURATION_RUNS_PATH = os.path.join(REPO, "BENCH", "curation_runs.jsonl")
+# local-cluster worker memory per executor, in MB
+EXEC_MEM_MB = 6144
+DEFAULT_N_DOCS = {"extract": 2_000_000, "curation": 100_000}
+
+_H32 = "cast(conv(substring(md5({0}), 1, 8), 16, 10) as bigint)"
 
 
-def run_once(cpus: int) -> dict:
-    out = subprocess.run(
-        ["taskset", "-c", f"0-{cpus - 1}",
-         sys.executable, os.path.join(REPO, "bench.py"),
-         "--extract-only", "--cpus", str(cpus), "--n-docs", str(N_DOCS)],
-        capture_output=True, text=True, check=True, cwd=REPO,
+# ---------------------------------------------------------------------------
+# corpora
+# ---------------------------------------------------------------------------
+
+def gen_documents(spark, n_docs: int, out_path: str, dup_mod: int = 10) -> None:
+    """documents-table-shaped corpus, one narrow SQL projection per row
+    (zero Python rows): each document's tokens are md5-indexed picks from a
+    256-word vocabulary, sources are uniform over 20. Every ``dup_mod``-th
+    doc near-duplicates the doc ``dup_mod - 1`` ids earlier — dup_mod=10 is
+    the default 10%-dup corpus; dup_mod=2 is the dup-heavy (50% near-dup)
+    corpus that puts the LSH/connected-components picks at corpus scale."""
+    from pyspark.sql import functions as F
+
+    seed = f"CASE WHEN id % {dup_mod} = {dup_mod - 1} THEN id - {dup_mod - 1} ELSE id END"
+    n_words = f"150 + ({seed}) % 250"
+    pick = _H32.format(f"concat({seed}, ':', i)")
+    body = (
+        f"array_join(transform(sequence(1, {n_words}), "
+        f"i -> concat('w', ({pick}) % 256)), ' ')"
     )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    d = json.loads(line)
+    text = (
+        f"CASE WHEN id % {dup_mod} = {dup_mod - 1} "
+        f"THEN concat({body}, ' dupmark', id) ELSE {body} END"
+    )
+    df = spark.range(0, n_docs, numPartitions=128).select(
+        F.col("id").alias("doc_id"),
+        F.expr(text).alias("text"),
+        F.lit("en").alias("lang"),
+        F.expr("concat('src', id % 20)").alias("source"),
+    ).withColumn("n_chars", F.length("text").cast("bigint"))
+    df.write.mode("overwrite").parquet(os.path.join(out_path, "documents.parquet"))
+
+
+def corpus(spark, job: str, n_docs: int, dup_mod: int) -> str:
+    """Path of the job's corpus under $SPARK_GRAFT_CORPUS_CACHE, built with
+    ``spark`` the first time it is asked for."""
+    if job == "extract":
+        return bench.ensure_corpus(spark, 0, 0, n_docs=n_docs)
+    suffix = "" if dup_mod == 10 else f"_dup{dup_mod}"
+    path = os.path.join(bench.CORPUS_CACHE, "curation", f"n{n_docs}{suffix}")
+    if not os.path.exists(os.path.join(path, "documents.parquet", "_SUCCESS")):
+        gen_documents(spark, n_docs, path, dup_mod=dup_mod)
+    return path
+
+
+def _corpus_in_session(job: str, n_docs: int, dup_mod: int) -> str:
+    from pdf_extractor_spark.pipeline import build_session
+
+    spark = build_session(master=f"local[{len(os.sched_getaffinity(0))}]",
+                          app_name="scaling-corpus")
+    spark.sparkContext.setLogLevel("ERROR")
+    path = corpus(spark, job, n_docs, dup_mod)
+    spark.stop()
+    return path
+
+
+def prepare_corpus(job: str, n_docs: int, dup_mod: int) -> str:
+    """Find or build the corpus in a spawned child: a session's JVM outlives
+    spark.stop() and, left in this process, would compete with the pinned
+    legs for CPU (measured: 83% of a core while a 1-core leg ran) and
+    memory (3.8 GB RSS after a 20k-doc corpus)."""
+    ctx = multiprocessing.get_context("spawn")
+    with ProcessPoolExecutor(1, mp_context=ctx) as ex:
+        return ex.submit(_corpus_in_session, job, n_docs, dup_mod).result()
+
+
+def split_bytes(job: str, path: str, cores: int) -> int:
+    """Scan split size for ~4 scan tasks per core (bench.py's rule): a small
+    local corpus would otherwise bin-pack into one or two default 128 MB
+    splits and run every narrow stage on two tasks at any core count. The
+    curation floor is 1 MB, not 4 MB: its text-only rows are ~1 KB, so a
+    100k-doc corpus is ~140 MB and a 4 MB floor would leave the 32-core leg
+    about one scan task per core."""
+    floor = (4 << 20) if job == "extract" else (1 << 20)
+    return max(floor, min(128 << 20, bench.dir_bytes(path) // (cores * 4)))
+
+
+# ---------------------------------------------------------------------------
+# one curation leg (runs in the pinned child process)
+# ---------------------------------------------------------------------------
+
+def curation_leg(args, cores: int) -> dict:
+    from pdf_extractor_spark.pipeline import build_session
+    import pdf_extractor_spark.pipeline_queries as pq
+
+    sp = args.shuffle_partitions or cores
+    # executors shape: the master comes from spark-submit and
+    # build_session(master=None) inherits it
+    spark = build_session(
+        master=None if args.shape == "executors" else f"local[{cores}]",
+        shuffle_partitions=sp, app_name=f"curation-scaling-{cores}",
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    path = corpus(spark, "curation", args.n_docs, args.dup_mod)
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+                   str(split_bytes("curation", path, cores)))
+    legs = []
+    for _ in range(2):  # best of 2: the first pass pays codegen + CC warm-up
+        # every pass rebuilds the memoized side inputs: a memo hit would
+        # time a checkpoint read, not the curation pipeline
+        pq.reset_side_memo()
+        t0 = time.time()
+        pq.corpus_curation_record(spark, path).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        legs.append(round(time.time() - t0, 3))
+        spark.catalog.clearCache()
+    spark.stop()
+    best = min(legs)
     return {
-        "n_docs": N_DOCS,
-        "cpus": cpus,
-        "seconds": d["queries"]["extract_pipeline"],
-        "docs_per_sec": d["docs_per_sec"],
+        "seconds": best, "docs_per_sec": round(args.n_docs / best, 2),
+        "legs": legs, "shuffle_partitions": sp,
+        "broadcast_row_limit": pq._BROADCAST_ROW_LIMIT,
     }
 
 
-def record(row: dict) -> None:
-    os.makedirs(os.path.dirname(RUNS_PATH), exist_ok=True)
-    with open(RUNS_PATH, "a") as f:
+# ---------------------------------------------------------------------------
+# leg commands
+# ---------------------------------------------------------------------------
+
+def curation_leg_args(args, cores: int) -> list:
+    cmd = [os.path.abspath(__file__), "--leg", str(cores), "--job", "curation",
+           "--shape", args.shape, "--n-docs", str(args.n_docs),
+           "--dup-mod", str(args.dup_mod)]
+    if args.shuffle_partitions:
+        cmd += ["--shuffle-partitions", str(args.shuffle_partitions)]
+    return cmd
+
+
+def thread_cmd(args, cores: int) -> list:
+    if args.job == "extract":
+        return [sys.executable, os.path.join(REPO, "bench.py"), "--extract-only",
+                "--cpus", str(cores), "--n-docs", str(args.n_docs)]
+    return [sys.executable] + curation_leg_args(args, cores)
+
+
+def submit_cmd(args, cores: int, path: str, zip_path: str, out: str) -> list:
+    cpe = args.cores_per_executor
+    # One list serves both jobs. The curation leg's build_session lays
+    # SESSION_DEFAULTS over it, which carry the same Arrow batch, reader
+    # batch and split settings, and it re-sets the split to the same value.
+    conf = {
+        "spark.driver.memory": "4g",
+        # local-cluster[E,C,mem]'s mem caps the worker; the executor heap
+        # comes from spark.executor.memory (the 1g default OOMs on the
+        # megabyte-PDF skew tail)
+        "spark.executor.memory": f"{EXEC_MEM_MB - 1024}m",
+        "spark.sql.shuffle.partitions": str(args.shuffle_partitions or cores),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
+        "spark.python.worker.reuse": "true",
+        # SESSION_DEFAULTS' fat-binary-row hardening on the executor side:
+        # small columnar batches (4096 rows of megabyte PDF cells OOM the
+        # heap) and ZGC (no humongous-region / GCLocker stalls under Arrow)
+        "spark.sql.parquet.columnarReaderBatchSize": "128",
+        "spark.executor.extraJavaOptions": "-XX:+UseZGC",
+        "spark.sql.files.maxPartitionBytes": str(split_bytes(args.job, path, cores)),
+    }
+    cmd = ["spark-submit", "--master",
+           f"local-cluster[{cores // cpe},{cpe},{EXEC_MEM_MB}]",
+           "--py-files", zip_path]
+    for k, v in conf.items():
+        cmd += ["--conf", f"{k}={v}"]
+    if args.job == "extract":
+        return cmd + [os.path.join(REPO, "tools", "run_job.py"), path, out,
+                      "--partitions", str(cores * 2), "--no-resume",
+                      "--bench-repeats", "1"]
+    return cmd + curation_leg_args(args, cores)
+
+
+def pin(cores: int) -> list:
+    """taskset prefix pinning a process tree to the first ``cores`` CPUs
+    this process may run on."""
+    cpus = sorted(os.sched_getaffinity(0))[:cores]
+    return ["taskset", "-c", ",".join(map(str, cpus))]
+
+
+def measurement(args, stdout: str) -> dict:
+    d = json.loads([l for l in stdout.splitlines() if l.startswith("{")][-1])
+    if args.job == "extract" and args.shape == "threads":  # bench.py's line
+        return {"seconds": d["queries"]["extract_pipeline"],
+                "docs_per_sec": d["docs_per_sec"], "legs": d["extract_legs"]}
+    if args.job == "extract":  # run_job.py --bench-repeats
+        return {k: d[k] for k in ("seconds", "docs_per_sec", "legs")}
+    return d
+
+
+# ---------------------------------------------------------------------------
+# rows
+# ---------------------------------------------------------------------------
+
+def runs_path(job: str, shape: str) -> str:
+    if job == "curation":
+        return CURATION_RUNS_PATH
+    return RUNS_PATH if shape == "threads" else CLUSTER_RUNS_PATH
+
+
+def read_rows(path: str) -> list:
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def record(path: str, row: dict) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "a") as f:
         f.write(json.dumps(row) + "\n")
 
 
-def best_by_cpus(n_docs: int) -> dict:
+def git_sha() -> str | None:
+    res = subprocess.run(["git", "describe", "--always", "--dirty", "--abbrev=12"],
+                         capture_output=True, text=True, cwd=REPO)
+    return res.stdout.strip() or None
+
+
+def best_by(rows, key) -> dict:
     best: dict = {}
-    if os.path.exists(RUNS_PATH):
-        for line in open(RUNS_PATH):
-            r = json.loads(line)
-            if r["n_docs"] != n_docs:
-                continue
-            cur = best.get(r["cpus"])
-            if cur is None or r["docs_per_sec"] > cur["docs_per_sec"]:
-                best[r["cpus"]] = r
+    for r in rows:
+        k = key(r)
+        if k not in best or r["docs_per_sec"] > best[k]["docs_per_sec"]:
+            best[k] = r
     return best
 
 
-def _latest_sweep(n_docs: int = N_DOCS) -> dict:
-    """Trailing back-to-back sweep: walk runs.jsonl in reverse collecting the
-    best run per core count, stopping at the first NON-ADJACENT repeat of a
-    core count (an earlier sweep's leg). Adjacent repeats are SCALING_REPEATS
-    legs of the same sweep and merge to their best — the pre-r5 rule stopped
-    at ANY repeat, which collapsed a REPEATS=2 sweep's envelope to one row.
-    Keeps the fit on one machine-state epoch."""
-    if not os.path.exists(RUNS_PATH):
+def sweep_summary(path: str, sweep_id: str) -> dict:
+    best = best_by((r for r in read_rows(path) if r.get("sweep_id") == sweep_id),
+                   lambda r: r["cpus"])
+    cores = sorted(best)
+    scaling = []
+    for lo, hi in zip(cores, cores[1:]):
+        speedup = best[hi]["docs_per_sec"] / best[lo]["docs_per_sec"]
+        scaling.append({"from": lo, "to": hi, "speedup": round(speedup, 3),
+                        "efficiency": round(speedup * lo / hi, 3)})
+    return {"sweep_id": sweep_id,
+            "docs_per_sec": {c: best[c]["docs_per_sec"] for c in cores},
+            "scaling": scaling}
+
+
+# ---------------------------------------------------------------------------
+# report
+# ---------------------------------------------------------------------------
+
+def _latest_sweep(n_docs: int) -> dict:
+    """Best run per core count among the rows of the newest sweep (the
+    sweep_id of the last row at this corpus size), so the envelope fit
+    stays on one machine-state epoch whatever core counts the previous
+    sweep ended on."""
+    rows = [r for r in read_rows(RUNS_PATH) if r["n_docs"] == n_docs]
+    if not rows:
         return {}
-    sweep: dict = {}
-    prev_cpus = None
-    for line in reversed(list(open(RUNS_PATH))):
-        r = json.loads(line)
-        if r["n_docs"] != n_docs:
-            continue
-        if r["cpus"] in sweep and r["cpus"] != prev_cpus:
-            break
-        cur = sweep.get(r["cpus"])
-        if cur is None or r["docs_per_sec"] > cur["docs_per_sec"]:
-            sweep[r["cpus"]] = r
-        prev_cpus = r["cpus"]
-    return sweep
-
-
-CLUSTER_RUNS_PATH = os.path.join(REPO, "BENCH", "cluster_runs.jsonl")
+    latest = rows[-1].get("sweep_id")
+    return best_by((r for r in rows if r.get("sweep_id") == latest),
+                   lambda r: r["cpus"])
 
 
 def cluster_best(n_docs: int) -> dict:
-    """Best multi-executor (spark-submit --py-files + local-cluster) leg per
-    (cores_per_executor, executors), from tools/cluster_scaling.py. Grouped
-    by executor SHAPE: an N-vs-4N octave is only meaningful when both legs
-    run the same cores-per-executor (1x2c vs 4x2c), so shapes never mix."""
-    best: dict = {}
-    if os.path.exists(CLUSTER_RUNS_PATH):
-        for line in open(CLUSTER_RUNS_PATH):
-            r = json.loads(line)
-            if r["n_docs"] != n_docs:
-                continue
-            shape = best.setdefault(r["cores_per_executor"], {})
-            cur = shape.get(r["executors"])
-            if cur is None or r["docs_per_sec"] > cur["docs_per_sec"]:
-                shape[r["executors"]] = r
-    return best
+    """Best executors-shape extraction leg per (cores_per_executor,
+    executors). Grouped by executor SHAPE: an N-vs-4N octave is only
+    meaningful when both legs run the same cores-per-executor (1x2c vs
+    4x2c), so shapes never mix."""
+    best = best_by(
+        (r for r in read_rows(CLUSTER_RUNS_PATH) if r["n_docs"] == n_docs),
+        lambda r: (r["cores_per_executor"], r["executors"]),
+    )
+    shapes: dict = {}
+    for (cpe, e), r in best.items():
+        shapes.setdefault(cpe, {})[e] = r
+    return shapes
 
 
-def all_n_docs() -> list:
-    seen = set()
-    if os.path.exists(RUNS_PATH):
-        for line in open(RUNS_PATH):
-            seen.add(json.loads(line)["n_docs"])
-    return sorted(seen, reverse=True)
-
-
-def write_report(n_docs: int) -> dict:
+def write_report() -> None:
+    """Regenerate BENCH/BASELINE.md: best-per-leg thread tables for every
+    corpus size in BENCH/runs.jsonl, then the per-core envelope and the
+    executor tables for the largest (headline) corpus."""
+    rows = read_rows(RUNS_PATH)
+    sizes = sorted({r["n_docs"] for r in rows}, reverse=True)
+    if not sizes:
+        return
+    n_docs = sizes[0]
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(
             "# Scaling evidence (north_rule: efficiency >= 0.8 between N and 4N)\n\n"
@@ -133,35 +366,22 @@ def write_report(n_docs: int) -> dict:
             "exactly that many cores; best recorded run per leg\n"
             "(tools/scaling_bench.py appends every run to BENCH/runs.jsonl):\n"
         )
-        result = {}
-        for nd in all_n_docs():
-            best = best_by_cpus(nd)
-            octaves = []
-            for n in sorted(best):
-                if n * 4 in best:
-                    speed = best[n * 4]["docs_per_sec"] / best[n]["docs_per_sec"]
-                    octaves.append((n, n * 4, round(speed, 3), round(speed / 4.0, 3)))
+        for nd in sizes:
+            best = best_by((r for r in rows if r["n_docs"] == nd), lambda r: r["cpus"])
             f.write(f"\n## corpus: {nd:,} docs\n\n")
             f.write("| cores | wall sec | docs/sec |\n|---|---|---|\n")
             for n in sorted(best):
                 r = best[n]
                 f.write(f"| local[{n}] | {r['seconds']} | {r['docs_per_sec']} |\n")
             f.write("\n| octave (N -> 4N) | speedup | efficiency |\n|---|---|---|\n")
-            for lo, hi, speed, eff in octaves:
-                marker = " ✓" if eff >= 0.8 else ""
-                f.write(f"| {lo} -> {hi} | {speed}x | **{eff}**{marker} |\n")
-            if nd == n_docs:
-                result = {
-                    "best": {str(k): v for k, v in best.items()},
-                    "octaves": [
-                        {"n": a, "4n": b, "speedup": s, "efficiency": e}
-                        for a, b, s, e in octaves
-                    ],
-                }
-        # per-core throughput table + linear fit over the LATEST CONSISTENT
-        # SWEEP (the trailing block of runs with pairwise-distinct core
-        # counts — same code, same session, run back-to-back). Absolute
-        # throughput on this shared box swings ±20% across days
+            for n in sorted(best):
+                if n * 4 in best:
+                    speed = best[n * 4]["docs_per_sec"] / best[n]["docs_per_sec"]
+                    eff = round(speed / 4.0, 3)
+                    marker = " ✓" if eff >= 0.8 else ""
+                    f.write(f"| {n} -> {n * 4} | {round(speed, 3)}x | **{eff}**{marker} |\n")
+        # per-core throughput table + linear fit over the LATEST SWEEP only:
+        # absolute throughput on this shared box swings ±20% across days
         # (runs.jsonl: the 32-core leg recorded 138 s one day, 174 s
         # another), so the envelope fit must never mix days; the octave
         # capability table above still reports best-per-leg.
@@ -218,7 +438,7 @@ def write_report(n_docs: int) -> dict:
                 for e in sorted(cbest):
                     r = cbest[e]
                     f.write(
-                        f"| {e} x {cpe} cores | {r['cores']} "
+                        f"| {e} x {cpe} cores | {e * cpe} "
                         f"| {r['seconds']} | {r['docs_per_sec']} |\n"
                     )
                 octs = [
@@ -270,14 +490,144 @@ def write_report(n_docs: int) -> dict:
         if os.path.exists(notes):
             with open(notes) as nf:
                 f.write("\n" + nf.read())
-    return result
 
 
-def main() -> None:
-    for cpus in LEGS:
-        for _ in range(REPEATS):
-            record(run_once(cpus))
-    print(json.dumps(write_report(N_DOCS)))
+# ---------------------------------------------------------------------------
+# sweep
+# ---------------------------------------------------------------------------
+
+def parse_args(argv=None):
+    avail = len(os.sched_getaffinity(0))
+    ap = argparse.ArgumentParser(
+        description="N-vs-4N scaling legs for the extraction or curation job.",
+    )
+    ap.add_argument("--job", choices=["extract", "curation"], default="extract")
+    ap.add_argument("--shape", choices=["threads", "executors"], default="threads")
+    ap.add_argument(
+        "--legs", type=lambda s: [int(x) for x in s.split(",")],
+        default=[max(1, avail // 4), avail],
+        help="total cores of each leg, comma-separated, run in this order; "
+             "in the executors shape a leg runs cores / --cores-per-executor "
+             f"executors (default: N,4N with 4N = the {avail} cores this "
+             "process may run on)",
+    )
+    ap.add_argument(
+        "--n-docs", type=int, default=None,
+        help="corpus size in documents (default: "
+             f"{DEFAULT_N_DOCS['extract']:,} for extract, "
+             f"{DEFAULT_N_DOCS['curation']:,} for curation)",
+    )
+    ap.add_argument(
+        "--repeats", type=int, default=1,
+        help="runs per leg, each in fresh processes and appending one row "
+             "that holds that run's fastest timed pass (default 1)",
+    )
+    ap.add_argument(
+        "--cores-per-executor", type=int, default=None,
+        help="executors shape only: cores per executor JVM (default 4)",
+    )
+    ap.add_argument(
+        "--shuffle-partitions", type=int, default=None,
+        help="curation only: spark.sql.shuffle.partitions on every leg "
+             "(default: the leg's core count)",
+    )
+    ap.add_argument(
+        "--dup-mod", type=int, default=None,
+        help="curation only: every dup_mod-th doc near-duplicates an earlier "
+             "one (default 10 = 10%% dups; 2 = the 50%%-dup-heavy corpus)",
+    )
+    ap.add_argument(
+        "--unhinted", action="store_true",
+        help="curation only: run the legs with SPARK_GRAFT_BROADCAST_ROWS=0, "
+             "so every size-gated broadcast hint is stripped and the AQE "
+             "shuffle-join fallback is what gets measured",
+    )
+    # internal: the process that times one curation leg on this many cores
+    ap.add_argument("--leg", type=int, default=None, help=argparse.SUPPRESS)
+    args = ap.parse_args(argv)
+    if args.job == "extract" and (args.shuffle_partitions is not None
+                                  or args.dup_mod is not None or args.unhinted):
+        ap.error("--shuffle-partitions, --dup-mod and --unhinted apply to "
+                 "--job curation only")
+    if args.shape == "threads" and args.cores_per_executor is not None:
+        ap.error("--cores-per-executor applies to --shape executors only")
+    if args.n_docs is None:
+        args.n_docs = DEFAULT_N_DOCS[args.job]
+    if args.dup_mod is None:
+        args.dup_mod = 10
+    if args.cores_per_executor is None:
+        args.cores_per_executor = 4
+    if min(args.n_docs, args.repeats, args.cores_per_executor, args.dup_mod) < 1:
+        ap.error("--n-docs, --repeats, --cores-per-executor and --dup-mod "
+                 "must be positive")
+    return args
+
+
+def check_legs(args) -> None:
+    """Refuse, before any leg runs, legs this process cannot pin: taskset
+    onto CPUs outside the affinity mask would silently run on fewer cores
+    and record a wrong octave."""
+    avail = len(os.sched_getaffinity(0))
+    bad = [c for c in args.legs if not 1 <= c <= avail]
+    if bad:
+        sys.exit(f"legs {bad} need more cores than the {avail} this process "
+                 "may run on; no leg was run")
+    if args.shape == "executors":
+        bad = [c for c in args.legs if c % args.cores_per_executor]
+        if bad:
+            sys.exit(f"legs {bad} are not a multiple of --cores-per-executor "
+                     f"{args.cores_per_executor}; no leg was run")
+
+
+def sweep(args) -> None:
+    sweep_id = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()) + f"-{os.getpid()}"
+    provenance = {"job": args.job, "shape": args.shape, "sweep_id": sweep_id,
+                  "git_sha": git_sha(), "nproc": len(os.sched_getaffinity(0))}
+    path = prepare_corpus(args.job, args.n_docs, args.dup_mod)
+    env = dict(os.environ, SPARK_GRAFT_BROADCAST_ROWS="0") if args.unhinted else None
+    rows_path = runs_path(args.job, args.shape)
+    work = tempfile.mkdtemp(prefix="scaling_bench_")
+    try:
+        zip_path = os.path.join(work, "engine.zip")
+        if args.shape == "executors":
+            subprocess.run(["zip", "-qr", zip_path, "pdf_extractor_spark",
+                            "-x", "*__pycache__*"], cwd=REPO, check=True)
+        for cores in args.legs:
+            for rep in range(args.repeats):
+                out = os.path.join(work, f"out_{cores}_{rep}")
+                cmd = pin(cores) + (
+                    thread_cmd(args, cores) if args.shape == "threads"
+                    else submit_cmd(args, cores, path, zip_path, out))
+                load = bench.read_loadavg()
+                res = subprocess.run(cmd, capture_output=True, text=True,
+                                     cwd=REPO, env=env)
+                shutil.rmtree(out, ignore_errors=True)
+                if res.returncode != 0:
+                    sys.stderr.write(res.stderr[-4000:])
+                    sys.exit(f"leg cores={cores} failed")
+                row = dict(provenance, loadavg_1m=load[0] if load else None,
+                           n_docs=args.n_docs, cpus=cores)
+                if args.shape == "executors":
+                    row["executors"] = cores // args.cores_per_executor
+                    row["cores_per_executor"] = args.cores_per_executor
+                if args.job == "curation":
+                    row.update(op="corpus_curation_record", dup_mod=args.dup_mod)
+                row.update(measurement(args, res.stdout))
+                record(rows_path, row)
+                print(json.dumps(row))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    write_report()
+    print(json.dumps(sweep_summary(rows_path, sweep_id)))
+
+
+def main(argv=None) -> None:
+    args = parse_args(argv)
+    if args.leg:
+        print(json.dumps(curation_leg(args, args.leg)))
+        return
+    check_legs(args)
+    sweep(args)
 
 
 if __name__ == "__main__":
