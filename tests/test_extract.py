@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.extract import engine
 from pdf_extractor_spark.pdf.tokenizer import tokenize_pdf
 
+from .conftest import FIXTURE_DIR, requires_fixtures
 from .kb_fixture import FIXTURE_KB
 
 OAB_SCHEMA = {
@@ -27,7 +28,7 @@ OAB_SCHEMA = {
 
 
 def load_doc(name: str) -> engine.Doc:
-    r = tokenize_pdf(open(f"/root/reference/meus_pdfs/{name}.pdf", "rb").read())
+    r = tokenize_pdf(open(f"{FIXTURE_DIR}/{name}.pdf", "rb").read())
     spans = sorted(r["spans"], key=lambda s: (-round(s["y0"], 2), round(s["x0"], 2)))
     return engine.doc_from_spans(spans, r["page_width"], r["page_height"])
 
@@ -36,6 +37,7 @@ def kb_for(label: str) -> dict:
     return {r["field"]: r for r in FIXTURE_KB if r["label"] == label}
 
 
+@requires_fixtures
 def test_extract_oab_1():
     res, failed = engine.extract_doc(load_doc("oab_1"), OAB_SCHEMA, kb_for("carteira_oab"))
     assert failed == []
@@ -48,6 +50,7 @@ def test_extract_oab_1():
     assert ", " in res["endereco_profissional"]  # newline collapse contract
 
 
+@requires_fixtures
 def test_extract_oab_2():
     res, failed = engine.extract_doc(load_doc("oab_2"), OAB_SCHEMA, kb_for("carteira_oab"))
     assert failed == []
@@ -56,6 +59,7 @@ def test_extract_oab_2():
     assert res["situacao"] == "REGULAR"
 
 
+@requires_fixtures
 def test_extract_tela_sistema():
     kbt = kb_for("tela_sistema")
     res3, f3 = engine.extract_doc(
@@ -75,6 +79,7 @@ def test_extract_tela_sistema():
     assert res1["total_de_parcelas"] == "76.871,20"
 
 
+@requires_fixtures
 def test_missing_heuristic_fails_field():
     res, failed = engine.extract_doc(
         load_doc("oab_1"), {"campo_inexistente": "desc"}, kb_for("carteira_oab")
@@ -83,6 +88,7 @@ def test_missing_heuristic_fails_field():
     assert res["campo_inexistente"] is None
 
 
+@requires_fixtures
 def test_derive_heuristic_for_value():
     doc = load_doc("oab_1")
     h = engine.derive_heuristic_for_value(doc, "inscricao", "101943")
@@ -95,6 +101,7 @@ def test_derive_heuristic_for_value():
     assert found and v == "101943"
 
 
+@requires_fixtures
 def test_learn_from_anchor():
     doc = load_doc("oab_1")
     v, h, found = engine.learn_from_anchor(doc, "situacao", "Situação do profissional")
@@ -141,6 +148,7 @@ def test_normalize_parity_python_vs_column(spark):
     assert got == want
 
 
+@requires_fixtures
 def test_spark_extract_fields(spark):
     """End-to-end Spark path: tokenize → assemble → broadcast KB join →
     Arrow extraction kernel, over all six fixtures."""
@@ -150,7 +158,7 @@ def test_spark_extract_fields(spark):
 
     docs = (
         spark.read.format("binaryFile")
-        .load("/root/reference/meus_pdfs/*.pdf")
+        .load(f"{FIXTURE_DIR}/*.pdf")
         .select(
             F.element_at(F.split("path", "/"), -1).alias("doc_id"),
             "content",

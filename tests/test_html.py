@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from pdf_extractor_spark.html.boilerplate import tokenize_html
 
+from .conftest import FIXTURE_DIR, requires_fixtures
+
 PAGE = b"""<!doctype html>
 <html><head><title>T</title><style>.x{color:red}</style>
 <script>var x = 1;</script></head>
@@ -59,12 +61,13 @@ def test_garbage_html():
     assert tokenize_html(b"<p>" + b"word " * 20)["spans"][0]["kind"] == "text"
 
 
+@requires_fixtures
 def test_mixed_pipeline_dispatch(spark):
     """PDF and HTML docs flow through one tokenize_stage, one span contract."""
     from pdf_extractor_spark.pipeline import tokenize_stage
     from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
 
-    pdf_bytes = open("/root/reference/meus_pdfs/oab_1.pdf", "rb").read()
+    pdf_bytes = open(f"{FIXTURE_DIR}/oab_1.pdf", "rb").read()
     rows = [
         ("d_pdf", bytearray(pdf_bytes), "application/pdf", "l", {}, len(pdf_bytes)),
         ("d_html", bytearray(PAGE), "text/html", "l", {}, len(PAGE)),

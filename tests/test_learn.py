@@ -13,6 +13,8 @@ from pdf_extractor_spark.extract.learn import learn_kb
 from pdf_extractor_spark.extract.udf import extract_fields
 from pdf_extractor_spark.pipeline import tokenize_stage
 
+from .conftest import FIXTURE_DIR, requires_fixtures
+
 SCHEMA_FIELDS = {
     "nome": "Nome do profissional",
     "inscricao": "Número de inscrição",
@@ -22,10 +24,10 @@ SCHEMA_FIELDS = {
 
 
 def _docs(spark, names):
-    paths = [f"/root/reference/meus_pdfs/{n}.pdf" for n in names]
+    paths = [f"{FIXTURE_DIR}/{n}.pdf" for n in names]
     df = (
         spark.read.format("binaryFile")
-        .load("/root/reference/meus_pdfs/*.pdf")
+        .load(f"{FIXTURE_DIR}/*.pdf")
         .where(F.element_at(F.split("path", "/"), -1).isin([os.path.basename(p) for p in paths]))
         .select(F.element_at(F.split("path", "/"), -1).alias("doc_id"), "content")
         .withColumn("label", F.lit("carteira_oab"))
@@ -37,6 +39,7 @@ def _docs(spark, names):
     return tokenize_stage(df)
 
 
+@requires_fixtures
 def test_kb_learned_on_one_doc_transfers(spark):
     # Mirrors the reference bootstrap: anchor-learnable fields come from U6
     # alone; `nome` has no printed label on the card, so the bootstrap
@@ -65,6 +68,7 @@ def test_kb_learned_on_one_doc_transfers(spark):
     assert res["oab_2.pdf"]["inscricao"] == "101943"
 
 
+@requires_fixtures
 def test_values_ground_truth_drives_u7(spark):
     docs = _docs(spark, ["oab_1"]).withColumn(
         "values", F.create_map(F.lit("inscricao"), F.lit("101943"))
@@ -75,6 +79,7 @@ def test_values_ground_truth_drives_u7(spark):
     assert row["metadata"].get("regex") == r"\d+"
 
 
+@requires_fixtures
 def test_winner_is_deterministic_across_docs(spark):
     kb1 = learn_kb(_docs(spark, ["oab_1", "oab_2", "oab_3"])).collect()
     kb2 = learn_kb(_docs(spark, ["oab_1", "oab_2", "oab_3"])).collect()

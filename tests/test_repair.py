@@ -23,6 +23,8 @@ from pdf_extractor_spark.extract.repair import (
 from pdf_extractor_spark.extract.udf import extract_fields
 from pdf_extractor_spark.pipeline import tokenize_stage
 
+from .conftest import FIXTURE_DIR, requires_fixtures
+
 SCHEMA = {"inscricao": "Número de inscrição do profissional"}
 
 BROKEN_KB = [
@@ -38,7 +40,7 @@ BROKEN_KB = [
 def _docs(spark, names, label="carteira_oab", schema=SCHEMA):
     df = (
         spark.read.format("binaryFile")
-        .load("/root/reference/meus_pdfs/*.pdf")
+        .load(f"{FIXTURE_DIR}/*.pdf")
         .select(
             F.element_at(F.split("path", "/"), -1).alias("doc_id"), "content"
         )
@@ -60,6 +62,7 @@ def _kb(spark, rows):
     return kb_df(spark, rows)
 
 
+@requires_fixtures
 def test_repair_replaces_failing_rule_and_transfers(spark):
     """Doc fails under KB v1 → stub fallback adjudicates the value → rule
     re-derived and upserted → a DIFFERENT doc of the label now extracts
@@ -84,6 +87,7 @@ def test_repair_replaces_failing_rule_and_transfers(spark):
     assert transferred["failed_fields"] == []
 
 
+@requires_fixtures
 def test_repair_no_response_leaves_kb_and_nulls_result(spark):
     """A failed/refused LLM call (no replay entry → NULL response,
     extractor.py:453-455) must not touch the KB; the field stays null."""
@@ -97,6 +101,7 @@ def test_repair_no_response_leaves_kb_and_nulls_result(spark):
     assert rule["metadata"]["anchor_text"] == "Matricula"  # unchanged
 
 
+@requires_fixtures
 def test_repair_null_value_not_derived(spark):
     """'null' from the LLM (string) is normalized and never drives a
     derivation (extractor.py:728-739 guards on value truthiness)."""
@@ -110,6 +115,7 @@ def test_repair_null_value_not_derived(spark):
     assert rule["metadata"]["anchor_text"] == "Matricula"
 
 
+@requires_fixtures
 def test_planner_branches(spark):
     """extractor.py:905-925: unseen label → bootstrap; known+variable →
     llm_full; known+fixed → heuristics."""
@@ -138,6 +144,7 @@ def test_planner_branches(spark):
     }
 
 
+@requires_fixtures
 def test_extract_planned_end_to_end(spark):
     """The full three-way run: a bootstrap label learns rules from the
     replayed LLM values and its SECOND document extracts heuristically
@@ -177,6 +184,7 @@ def test_extract_planned_end_to_end(spark):
     assert learned >= 1
 
 
+@requires_fixtures
 def test_cost_metrics_f10(spark):
     """F10 (extractor.py:56-57,443-446): cost = in·0.150/1e6 + out·0.600/1e6,
     summed across calls; failures counted separately."""

@@ -8,7 +8,7 @@ import os
 from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
 from pdf_extractor_spark.streaming.job import run_stream_extraction
 
-from .conftest import fixture_pdfs
+from .conftest import fixture_pdfs, requires_fixtures
 
 EXPECTED = {
     "oab_1.pdf": 15, "oab_2.pdf": 15, "oab_3.pdf": 12,
@@ -27,6 +27,7 @@ def _write_docs(spark, path):
     ).parquet(path)
 
 
+@requires_fixtures
 def test_stream_matches_batch_and_resumes(spark, tmp_path):
     docs_path = str(tmp_path / "docs")
     out_dir = str(tmp_path / "out")

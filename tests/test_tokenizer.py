@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.pdf.tokenizer import tokenize_pdf
 from pdf_extractor_spark import assemble
 
-from .conftest import fixture_pdfs
+from .conftest import FIXTURE_DIR, fixture_pdfs, requires_fixtures
 from .golden import golden_spans
 
 EXPECTED_COUNTS = {  # FIXTURES.md §4
@@ -27,7 +27,12 @@ def _ordered(spans):
     return sorted(spans, key=lambda s: (-round(s["y0"], 2), round(s["x0"], 2)))
 
 
-@pytest.mark.parametrize("path", fixture_pdfs(), ids=lambda p: p.split("/")[-1])
+# ids as a list, not a callable: with no fixtures pytest would call the
+# callable on its empty-parameter-set sentinel and fail the module's collection
+@requires_fixtures
+@pytest.mark.parametrize(
+    "path", fixture_pdfs(), ids=[p.split("/")[-1] for p in fixture_pdfs()]
+)
 def test_tokenizer_matches_golden(path):
     data = open(path, "rb").read()
     got = [
@@ -45,12 +50,13 @@ def test_tokenizer_garbage_inputs():
     assert tokenize_pdf(b"%PDF-1.7\nbroken")["spans"] == []
 
 
+@requires_fixtures
 def test_spark_tokenize_and_assemble(spark):
     """Full Spark path: binaryFile scan → pandas_udf → array_sort assembly →
     public span contract equals the golden for every fixture."""
     df = (
         spark.read.format("binaryFile")
-        .load("/root/reference/meus_pdfs/*.pdf")
+        .load(f"{FIXTURE_DIR}/*.pdf")
         .select(
             F.element_at(F.split("path", "/"), -1).alias("doc_id"),
             "content",
@@ -61,7 +67,7 @@ def test_spark_tokenize_and_assemble(spark):
     out = tokenize_stage(df).select("doc_id", "spans").collect()
     assert len(out) == 6
     for row in out:
-        data = open(f"/root/reference/meus_pdfs/{row['doc_id']}", "rb").read()
+        data = open(f"{FIXTURE_DIR}/{row['doc_id']}", "rb").read()
         want = golden_spans(data)
         got = [(s["kind"], s["text"], s["media_ref"]) for s in row["spans"]]
         assert got == want, row["doc_id"]
