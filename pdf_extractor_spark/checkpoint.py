@@ -118,29 +118,15 @@ def write_checkpoint(
     Reading the committed files (rather than trusting the in-flight
     DataFrame) makes the checkpoint reflect exactly what is durable — the
     property the reference gets by appending to its journal only after each
-    document is written (batch_extract.py:176-181). ``byte_count`` is the
-    serialized size of each doc's payload column (spans or result map) —
-    the size-aware-scheduling input the lineage schema carries."""
+    document is written (batch_extract.py:176-181). Both sinks write
+    ``partition_id``, ``span_count`` and ``byte_count`` (the serialized size
+    of each doc's spans or result map, the size-aware-scheduling input the
+    lineage schema carries), computed by the writing task in the write
+    pass; the commit only reads them back."""
     run_path = spans_run_path(output_dir, run_id, table)
     if not os.path.isdir(run_path):
         return 0
     written = spark.read.parquet(run_path)
-    if "partition_id" not in written.columns:
-        written = written.withColumn("partition_id", F.lit(-1))
-    if "byte_count" in written.columns:
-        # computed by the WRITING task in the same job as the spans write
-        # (one to_json per doc, amortized into the write pass) — the commit
-        # only reads the column back
-        byte_count = F.col("byte_count").cast("long")
-    else:
-        payload = next(
-            (c for c in ("spans", "result") if c in written.columns), None
-        )
-        byte_count = (
-            F.octet_length(F.to_json(F.col(payload))).cast("long")
-            if payload is not None
-            else F.lit(0).cast("long")
-        )
     lineage = written.select(
         F.lit(run_id).alias("run_id"),
         F.col("partition_id").cast("int").alias("partition_id"),
@@ -148,7 +134,7 @@ def write_checkpoint(
         F.col("content_hash"),
         F.lit("committed").alias("status"),
         F.col("span_count").cast("int").alias("span_count"),
-        byte_count.alias("byte_count"),
+        F.col("byte_count").cast("long").alias("byte_count"),
         F.current_timestamp().alias("committed_at"),
     )
     already_n = 0
@@ -174,21 +160,16 @@ def write_checkpoint(
     # the run dir listing — no extra job): 1 file at bench scale, ~O(1000)
     # at 10^12 docs, and read_checkpoint scans proportionally fewer footers.
     # coalesce() inserts no shuffle — it collapses the UPSTREAM scan into
-    # n_out tasks too — so it is applied only on the metadata-only path
-    # (byte_count present: parquet column pruning means those tasks read a
-    # few small columns, never the spans payload). The legacy fallback that
-    # serializes every spans payload through to_json keeps its natural
-    # partitioning: collapsing THAT into one task would single-thread a
-    # multi-GB serialization pass.
-    if "byte_count" in written.columns:
-        try:
-            spans_bytes = sum(
-                e.stat().st_size for e in os.scandir(run_path) if e.is_file()
-            )
-            n_out = max(1, -(-spans_bytes // (6 << 30)))
-            lineage = lineage.coalesce(int(n_out))
-        except OSError:
-            pass  # permission/race on the listing — keep natural partitioning
+    # n_out tasks too — which is cheap here: parquet column pruning means
+    # those tasks read a few small columns, never the spans payload.
+    try:
+        spans_bytes = sum(
+            e.stat().st_size for e in os.scandir(run_path) if e.is_file()
+        )
+        n_out = max(1, -(-spans_bytes // (6 << 30)))
+        lineage = lineage.coalesce(int(n_out))
+    except OSError:
+        pass  # permission/race on the listing — keep natural partitioning
     lineage.write.mode("append").parquet(checkpoint_path(output_dir))
     _mark_committed(output_dir, run_id)
     return int(obs.get["n"]) + already_n

@@ -1440,7 +1440,7 @@ def tokenize_pdf(data: bytes) -> Dict[str, Any]:
     """bytes → {'page_width', 'page_height', 'spans': [PdfSpan, ...]}.
 
     Spans are in content-stream order; reading-order sort + offsets are a
-    separate (Spark-side) stage — see :mod:`pdf_extractor_spark.assemble`.
+    separate stage — see ``tokenize_dispatch.assemble_doc``.
     Never raises; unparseable inputs yield an empty span list.
 
     Encrypted documents (/Encrypt in the trailer or xref-stream dict, PDF

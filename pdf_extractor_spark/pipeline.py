@@ -30,10 +30,9 @@ import time
 import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark import assemble
 from pdf_extractor_spark.schema import METRICS_SCHEMA  # noqa: F401 (public)
 
 SESSION_DEFAULTS = {
@@ -139,6 +138,20 @@ def dedup_with_lineage(df: DataFrame, content_col: str = "content") -> DataFrame
     )
 
 
+def public_spans(ordered: Column) -> Column:
+    """Project ordered geo spans down to the public contract
+    array<struct<kind,text,media_ref,offset>> (input_hint shape)."""
+    return F.transform(
+        ordered,
+        lambda s: F.struct(
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            s["offset"].alias("offset"),
+        ),
+    )
+
+
 def tokenize_stage(
     df: DataFrame, content_col: str = "content", columns: str = "geo"
 ) -> DataFrame:
@@ -149,8 +162,7 @@ def tokenize_stage(
     text) happen inside one fused Arrow kernel (tokenize_dispatch): content
     crosses the Arrow boundary exactly once and no higher-order Column
     function sits on the hot path (those fall out of codegen — see
-    tokenize_dispatch docstring for the measurements). assemble.py holds
-    the equivalent Column forms, oracle-tested separately.
+    tokenize_dispatch docstring for the measurements).
 
     ``columns="geo"`` emits geometry-bearing ordered spans + full_text (for
     downstream field extraction); ``columns="public"`` pushes the projection
@@ -162,6 +174,8 @@ def tokenize_stage(
         tokenize_assemble_udf,
     )
 
+    if columns not in ("geo", "public"):
+        raise ValueError(f"columns={columns!r}; expected 'geo' or 'public'")
     if columns == "public":
         tok = df.withColumn("_tok", tokenize_assemble_public_udf(F.col(content_col)))
         return (
@@ -175,7 +189,7 @@ def tokenize_stage(
         tok.withColumn("ordered_spans", F.col("_tok.spans"))
         .withColumn("page_width", F.col("_tok.page_width"))
         .withColumn("page_height", F.col("_tok.page_height"))
-        .withColumn("spans", assemble.public_spans(F.col("_tok.spans")))
+        .withColumn("spans", public_spans(F.col("_tok.spans")))
         .withColumn("full_text", F.col("_tok.full_text"))
         .drop("_tok")
     )
@@ -184,14 +198,14 @@ def tokenize_stage(
 def extract_spans(
     docs: DataFrame,
     partitions: int = 32,
-    checkpoint: Optional[DataFrame] = None,
     dedup: str = "narrow",
     columns: str = "geo",
 ) -> DataFrame:
-    """RAW_DOC_SCHEMA docs → (doc_id, spans, full_text, …) with resume/dedup.
+    """RAW_DOC_SCHEMA docs → (doc_id, spans, full_text, …) with dedup.
 
-    ``checkpoint``: prior lineage table; already-committed doc_ids are
-    skipped via left-anti join (batch_extract.py:99-107 semantics).
+    ``docs`` is the work left to do: the batch and stream jobs anti-join
+    committed doc_ids out of the checkpoint (batch_extract.py:99-107
+    semantics) once, for their nothing-to-do check, and pass that frame.
 
     ``dedup`` is a cost-model switch (the reference's pdf_cache always
     memoizes, extractor.py:883-886; at cluster scale the right answer
@@ -208,10 +222,9 @@ def extract_spans(
       (OCR, media decode, LLM stages) or the dup rate is high; this is the
       100 TB default for those stages.
     """
+    if dedup not in ("narrow", "wide"):
+        raise ValueError(f"dedup={dedup!r}; expected 'narrow' or 'wide'")
     df = with_content_hash(docs)
-    if checkpoint is not None:
-        done = checkpoint.where(F.col("status") == "committed").select("doc_id")
-        df = df.join(done, "doc_id", "left_anti")
     extra = (
         [] if columns == "public" else ["ordered_spans", "full_text"]
     )
@@ -406,8 +419,8 @@ def run_extraction_job(
         ckpt = read_checkpoint(spark, output_dir)
     if ckpt is not None:
         done = ckpt.where(F.col("status") == "committed").select("doc_id")
-        todo = docs.join(done, "doc_id", "left_anti")
-        if todo.isEmpty():
+        docs = docs.join(done, "doc_id", "left_anti")
+        if docs.isEmpty():
             return {
                 "run_id": run_id, "docs": 0, "seconds": time.time() - t0,
                 "docs_per_sec": 0.0, "metrics": {"docs": 0},
@@ -416,7 +429,7 @@ def run_extraction_job(
     # spans-only job → push the public projection into the kernel (geometry
     # and full_text never cross Arrow; full_text is derivable from spans).
     result = extract_spans(
-        docs, partitions=partitions, checkpoint=ckpt, dedup=dedup, columns="public"
+        docs, partitions=partitions, dedup=dedup, columns="public"
     )
     out = lineage_projection(result)
     # A3/A5 run counters ride the job itself via observe() — no second pass
@@ -462,7 +475,6 @@ def run_field_extraction_job(
     kb: Optional[DataFrame] = None,
     replay: Optional[dict] = None,
     run_id: Optional[str] = None,
-    partitions: int = 32,
     resume: bool = True,
 ) -> dict:
     """The reference CLI end-to-end (`/root/reference/batch_extract.py` +
@@ -519,6 +531,9 @@ def run_field_extraction_job(
         .withColumn(
             "span_count",  # lineage metric: # non-null extracted fields
             F.size(F.map_filter("result", lambda k, v: v.isNotNull())).cast("int"),
+        )
+        .withColumn(
+            "byte_count", F.octet_length(F.to_json("result")).cast("long")
         )
         .withColumn("partition_id", F.spark_partition_id())
     )

@@ -70,8 +70,10 @@ ASSEMBLED_STRUCT = StructType(
     ]
 )
 
-# Projection-pushed variant: public span contract only — geometry and full
-# text never cross the Arrow boundary (tokenize_assemble_public_udf).
+# Projection-pushed variant: public span contract only. The same kernel body
+# returns the ASSEMBLED_STRUCT frame under this type; the Arrow conversion
+# keeps these fields by name, so geometry and full text never cross the
+# boundary (tokenize_dispatch.tokenize_assemble_public_udf).
 ASSEMBLED_PUBLIC_STRUCT = StructType(
     [
         StructField("page_width", FloatType()),

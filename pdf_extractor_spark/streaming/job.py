@@ -54,7 +54,6 @@ def run_stream_extraction(
     input_path: str,
     output_dir: str,
     run_id: str = "stream",
-    partitions: int = 32,
     await_termination: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ):
@@ -88,7 +87,8 @@ def run_stream_extraction(
         batch_run = f"{run_id}_b{batch_id}"
         if ckpt is not None:
             done = ckpt.where(F.col("status") == "committed").select("doc_id")
-            if batch_df.join(done, "doc_id", "left_anti").isEmpty():
+            batch_df = batch_df.join(done, "doc_id", "left_anti")
+            if batch_df.isEmpty():
                 return  # fully committed batch — never touch its run dir
         # A durable run dir from a prior attempt of THIS batch must never be
         # rewritten: mode('overwrite') over a partially-committed batch would
@@ -105,10 +105,7 @@ def run_stream_extraction(
         # spans-only sink → kernel-level projection pushdown, same as the
         # batch path (geometry/full_text never cross Arrow); the sink
         # columns come from the SAME projection the batch job writes
-        result = extract_spans(
-            batch_df, partitions=partitions, checkpoint=ckpt, columns="public"
-        )
-        out = lineage_projection(result)
+        out = lineage_projection(extract_spans(batch_df, columns="public"))
         out.write.mode("overwrite").parquet(spans_run_path(output_dir, batch_run))
         write_checkpoint(spark, output_dir, batch_run)
 

@@ -1,7 +1,7 @@
 """Single-pass tokenizer dispatch + in-kernel assembly.
 
-One Arrow ``pandas_udf`` that sniffs magic bytes per row, routes to the PDF
-or HTML kernel, and finishes the per-document work (reading-order sort,
+One Arrow ``pandas_udf`` body that sniffs magic bytes per row, routes to the
+PDF or HTML kernel, and finishes the per-document work (reading-order sort,
 offset assignment, full-text build) before the bytes leave Python. Two
 measured reasons for the fusion:
 
@@ -14,15 +14,18 @@ measured reasons for the fusion:
   (transform/array_sort/filter/split) fall out of whole-stage codegen and
   cost more than the tokenizer itself on fat span arrays (+23s on a 36s
   stage at 500k docs); per-document sorting/joining is O(spans) local work
-  that Python does for free while the data is already here. The
-  column-expression equivalents live in assemble.py and stay oracle-tested
-  (w1/w2/w4) — they are the right tool for *relational* plans, just not for
-  this hot path.
+  that Python does for free while the data is already here.
 
-The sort key mirrors assemble.ordered_spans exactly — struct natural
-ordering over (-round(y0,2), round(x0,2), kind, text, media_ref, x0, y0,
-x1, y1, size) with SQL NULLS FIRST semantics — so either path yields
-byte-identical span sequences (golden-tested on the reference fixtures).
+Reading order is the struct natural ordering over (-round(y0,2),
+round(x0,2), kind, text, media_ref, x0, y0, x1, y1, size) with SQL NULLS
+FIRST semantics; the span sequences it yields are pinned by the fixture
+goldens and the frozen ``s1_extract_spans`` hashes.
+
+The one body is registered under two return types. Spark builds a struct
+result by field name, and Arrow reads struct fields out of dicts by name
+and ignores extra keys, so ``ASSEMBLED_PUBLIC_STRUCT`` drops the geometry
+floats and ``full_text`` during the Arrow conversion — nothing extra
+crosses the boundary and no per-span projection runs in Python.
 """
 
 from __future__ import annotations
@@ -39,7 +42,9 @@ from pyspark.sql.functions import pandas_udf
 from pdf_extractor_spark.schema import ASSEMBLED_PUBLIC_STRUCT, ASSEMBLED_STRUCT
 from pdf_extractor_spark.pdf.tokenizer import tokenize_pdf
 from pdf_extractor_spark.html.boilerplate import tokenize_html
-from pdf_extractor_spark.assemble import TRUNCATE_SENTINEL, TRUNCATE_WORDS
+
+TRUNCATE_WORDS = 4000  # extractor.py:127
+TRUNCATE_SENTINEL = "\n[...texto truncado...]"  # extractor.py:128
 
 
 def tokenize_any(data) -> dict:
@@ -54,12 +59,14 @@ _CENT = Decimal("0.01")
 
 
 def _round2(v: float) -> float:
-    """Replicate the Column path's F.round(geo_col, 2) EXACTLY.
+    """Round a coordinate to 2 places exactly as Spark's F.round(geo_col, 2).
 
-    Two subtleties make naive arithmetic diverge from Spark:
-    * the geo columns are float32 (GEO_SPAN_STRUCT), so the Column path
-      rounds the float32-cast value while the kernel holds float64 —
-      quantize through a float32 round-trip first;
+    The float32 + HALF_UP shortest-repr rounding below is what the fixture
+    goldens and the frozen ``s1_extract_spans`` hashes pin; two subtleties
+    make naive arithmetic diverge from it:
+    * the geo columns are float32 (GEO_SPAN_STRUCT), so Spark rounds the
+      float32-cast value while the kernel holds float64 — quantize through
+      a float32 round-trip first;
     * Spark's Round = BigDecimal.valueOf(double) HALF_UP, i.e. it rounds
       the SHORTEST DECIMAL REPR of the double (Double.toString), not the
       binary value: the double printing as "0.145" rounds to 0.15 even
@@ -109,7 +116,7 @@ _WS = re.compile(r"\s+")
 
 def assemble_doc(tok: Dict[str, Any]) -> Dict[str, Any]:
     """Reading-order sort + offsets + truncated full text (mirrors
-    extractor.py:103-128 semantics; see assemble.py for the Column forms)."""
+    extractor.py:103-128 semantics)."""
     spans = sorted(tok["spans"], key=_sort_key)
     for i, s in enumerate(spans):
         s["offset"] = i
@@ -142,9 +149,10 @@ def assemble_doc(tok: Dict[str, Any]) -> Dict[str, Any]:
     }
 
 
-@pandas_udf(ASSEMBLED_STRUCT)
-def tokenize_assemble_udf(content: pd.Series) -> pd.DataFrame:
+def _tokenize_assemble(content: pd.Series) -> pd.DataFrame:
     rows = [assemble_doc(tokenize_any(b)) for b in content]
+    # column order matches both return types' field order, so positional
+    # assignment (assignColumnsByName=false) gives the same struct
     return pd.DataFrame(
         {
             "page_width": [r["page_width"] for r in rows],
@@ -155,24 +163,8 @@ def tokenize_assemble_udf(content: pd.Series) -> pd.DataFrame:
     )
 
 
-_PUBLIC_KEYS = ("kind", "text", "media_ref", "offset")
-
-
-@pandas_udf(ASSEMBLED_PUBLIC_STRUCT)
-def tokenize_assemble_public_udf(content: pd.Series) -> pd.DataFrame:
-    """Projection pushed INTO the kernel: when the consumer only needs the
-    public span contract, the geometry floats (5 per span) and the full_text
-    string never cross the Arrow boundary — the kernel-level analog of
-    parquet column pruning. Use tokenize_assemble_udf when a downstream
-    stage (field extraction) needs rects."""
-    rows = [assemble_doc(tokenize_any(b)) for b in content]
-    return pd.DataFrame(
-        {
-            "page_width": [r["page_width"] for r in rows],
-            "page_height": [r["page_height"] for r in rows],
-            "spans": [
-                [{k: s[k] for k in _PUBLIC_KEYS} for s in r["spans"]]
-                for r in rows
-            ],
-        }
-    )
+# geo: ordered spans with geometry + full_text, for field extraction
+tokenize_assemble_udf = pandas_udf(_tokenize_assemble, ASSEMBLED_STRUCT)
+# public: the 4-field span contract only — the kernel-level analog of
+# parquet column pruning, for spans-only jobs
+tokenize_assemble_public_udf = pandas_udf(_tokenize_assemble, ASSEMBLED_PUBLIC_STRUCT)

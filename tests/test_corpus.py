@@ -3,6 +3,10 @@ tokenizability of both document kinds (bench.py's input contract)."""
 
 from __future__ import annotations
 
+import struct
+
+import pytest
+
 from pdf_extractor_spark.corpus import _doc_for_index, generate_corpus
 from pdf_extractor_spark.tokenize_dispatch import tokenize_any
 
@@ -71,28 +75,50 @@ def test_frame_sample_fanout(spark):
     assert got == want
 
 
-def test_spark_path_equals_local_kernel(spark):
+_GEO = ("x0", "y0", "x1", "y1", "size")
+
+
+def _f32(v):
+    return struct.unpack("f", struct.pack("f", v))[0]
+
+
+@pytest.mark.parametrize("columns", ["public", "geo"])
+def test_spark_path_equals_local_kernel(spark, columns):
     """Distributed extract_spans output is span-for-span identical to the
     kernel run locally on the same bytes (SURVEY.md §5.4 spot check) —
-    covers PDF, HTML, and duplicate docs through the real Spark path."""
+    covers PDF, HTML, and duplicate docs through the real Spark path, for
+    both projections of the one kernel body; the geo plan also carries the
+    ordered geometry and the full text."""
     from pdf_extractor_spark.pipeline import extract_spans
     from pdf_extractor_spark.tokenize_dispatch import assemble_doc, tokenize_any
 
     docs = generate_corpus(spark, 50, partitions=4, dup_frac=0.2)
+    geo = columns == "geo"
+    cols = ["doc_id", "spans"] + (["ordered_spans", "full_text"] if geo else [])
     got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in r["spans"]]
-        for r in extract_spans(docs, partitions=4, columns="public")
-        .select("doc_id", "spans").collect()
+        r["doc_id"]: r.asDict(recursive=True)
+        for r in extract_spans(docs, partitions=4, columns=columns)
+        .select(*cols).collect()
     }
     local = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in assemble_doc(tokenize_any(bytes(r["content"])))["spans"]
-        ]
+        r["doc_id"]: assemble_doc(tokenize_any(bytes(r["content"])))
         for r in docs.collect()
     }
-    assert got == local
+    assert got.keys() == local.keys()
+    for doc_id, want in local.items():
+        row = got[doc_id]
+        assert [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in row["spans"]] == [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in want["spans"]
+        ], doc_id
+        if geo:
+            assert row["full_text"] == want["full_text"], doc_id
+            # geometry crosses Arrow as float32
+            assert row["ordered_spans"] == [
+                {k: _f32(v) if k in _GEO else v for k, v in s.items()}
+                for s in want["spans"]
+            ], doc_id
 
 
 def test_wide_dedup_path_equals_narrow(spark):
@@ -117,3 +143,14 @@ def test_wide_dedup_path_equals_narrow(spark):
     wide = spans_of("wide")
     assert wide == narrow
     assert len(wide) == 60
+
+
+def test_unknown_plan_values_rejected():
+    """A typo in a plan switch raises instead of silently picking the
+    other plan (checked before any DataFrame is touched)."""
+    from pdf_extractor_spark.pipeline import extract_spans, tokenize_stage
+
+    with pytest.raises(ValueError, match="dedup='wdie'"):
+        extract_spans(None, dedup="wdie")
+    with pytest.raises(ValueError, match="columns='publc'"):
+        tokenize_stage(None, columns="publc")

@@ -43,12 +43,17 @@ def test_field_job_end_to_end_with_repair(spark, tmp_path):
     replay = {"card_0": replay_response({"registro": "55123"})}
     stats = run_field_extraction_job(
         spark, docs_path, out_dir, kb=kb_df(spark, BROKEN_KB),
-        replay=replay, run_id="r1", partitions=4,
+        replay=replay, run_id="r1",
     )
     assert stats["docs"] == 3
     results = spark.read.parquet(os.path.join(out_dir, "results"))
     vals = {r["doc_id"]: r["result"]["registro"] for r in results.collect()}
     assert vals == {f"card_{i}": "55123" for i in range(3)}
+
+    # lineage carries the writing task's partition and the result map's size
+    ckpt = spark.read.parquet(os.path.join(out_dir, "checkpoint"))
+    assert ckpt.count() == 3
+    assert ckpt.where((F.col("byte_count") > 0) & (F.col("partition_id") >= 0)).count() == 3
 
     # KB persisted with the repaired rule
     kb = spark.read.parquet(os.path.join(out_dir, "kb"))
@@ -66,7 +71,7 @@ def test_field_job_end_to_end_with_repair(spark, tmp_path):
 
     # resume: everything committed → no-op
     s2 = run_field_extraction_job(
-        spark, docs_path, out_dir, replay=replay, run_id="r2", partitions=4
+        spark, docs_path, out_dir, replay=replay, run_id="r2"
     )
     assert s2["docs"] == 0
     assert spark.read.parquet(os.path.join(out_dir, "results")).count() == 3
@@ -84,7 +89,7 @@ def test_kb_swap_heals_leftover_shelf_with_explicit_kb(spark, tmp_path):
     replay = {f"card_{i}": replay_response({"registro": "55123"}) for i in range(2)}
     run_field_extraction_job(
         spark, docs_path, out_dir, kb=kb_df(spark, BROKEN_KB),
-        replay=replay, run_id="r1", partitions=2,
+        replay=replay, run_id="r1",
     )
     # simulate the crash window: both kb and a non-empty kb_old on disk
     kb_dir = os.path.join(out_dir, "kb")
@@ -100,7 +105,7 @@ def test_kb_swap_heals_leftover_shelf_with_explicit_kb(spark, tmp_path):
     stats = run_field_extraction_job(
         spark, docs2, out_dir, kb=kb_df(spark, BROKEN_KB),
         replay={"fresh_0": replay_response({"registro": "55123"})},
-        run_id="r2", partitions=2,
+        run_id="r2",
     )
     assert stats["docs"] == 1  # the swap must not raise
     assert os.path.isdir(kb_dir)
@@ -117,13 +122,13 @@ def test_field_job_incremental_docs_use_repaired_kb(spark, tmp_path):
     run_field_extraction_job(
         spark, docs1, out_dir, kb=kb_df(spark, BROKEN_KB),
         replay={"card_0": replay_response({"registro": "55123"})},
-        run_id="r1", partitions=4,
+        run_id="r1",
     )
     # a second batch with MORE docs (card_0 committed + new card_1, card_2)
     docs2 = str(tmp_path / "docs2")
     _write_docs(spark, docs2, n=3)
     s2 = run_field_extraction_job(
-        spark, docs2, out_dir, replay={}, run_id="r2", partitions=4
+        spark, docs2, out_dir, replay={}, run_id="r2"
     )
     assert s2["docs"] == 2  # only the new cards
     assert s2["metrics"]["llm_calls"] == 0.0  # KB carried the repair
@@ -143,7 +148,7 @@ def test_variable_template_label_persists_not_rebootstrapped(spark, tmp_path):
         spark, docs1, out_dir,
         replay={"notas": replay_response({"registro": "111"},
                                          template_fixo=False)},
-        run_id="r1", partitions=4,
+        run_id="r1",
     )
     kb = spark.read.parquet(os.path.join(out_dir, "kb"))
     meta = kb.where(F.col("label") == "notas").collect()
@@ -156,7 +161,7 @@ def test_variable_template_label_persists_not_rebootstrapped(spark, tmp_path):
         spark, docs2, out_dir,
         replay={f"card_{i}": replay_response({"registro": "222"})
                 for i in range(1, 3)},
-        run_id="r2", partitions=4,
+        run_id="r2",
     )
     assert s2["docs"] == 2
     results = spark.read.parquet(os.path.join(out_dir, "results"))
@@ -176,14 +181,14 @@ def test_committed_run_id_cannot_be_reused(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     _write_docs(spark, docs1, n=1)
     run_field_extraction_job(spark, docs1, out_dir, kb=kb_df(spark, BROKEN_KB),
-                             replay={}, run_id="r1", partitions=4)
+                             replay={}, run_id="r1")
     docs2 = str(tmp_path / "docs2")
     _write_docs(spark, docs2, n=3)
     with _pytest.raises(ValueError, match="committed lineage"):
         run_field_extraction_job(spark, docs2, out_dir, replay={},
-                                 run_id="r1", partitions=4)
+                                 run_id="r1")
     # fresh run_id proceeds fine and old data is intact
     s = run_field_extraction_job(spark, docs2, out_dir, replay={},
-                                 run_id="r2", partitions=4)
+                                 run_id="r2")
     assert s["docs"] == 2
     assert spark.read.parquet(os.path.join(out_dir, "results")).count() == 3

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+from pdf_extractor_spark.corpus import generate_corpus
+from pdf_extractor_spark.pipeline import run_extraction_job
 from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
 from pdf_extractor_spark.streaming.job import run_stream_extraction
 
@@ -35,8 +37,7 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
 
     # multiple micro-batches (1 file per trigger) → all docs processed once
     run_stream_extraction(
-        spark, docs_path, out_dir, run_id="s1", partitions=3,
-        max_files_per_trigger=1,
+        spark, docs_path, out_dir, run_id="s1", max_files_per_trigger=1,
     )
     got = {
         r["doc_id"]: r["span_count"]
@@ -47,6 +48,39 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
 
     # restart with same output_dir: source checkpoint + lineage anti-join →
     # nothing reprocessed, no duplicate rows
-    run_stream_extraction(spark, docs_path, out_dir, run_id="s2", partitions=3)
+    run_stream_extraction(spark, docs_path, out_dir, run_id="s2")
     total = spark.read.parquet(os.path.join(out_dir, "spans")).count()
     assert total == len(EXPECTED)
+
+
+def _spans_by_doc(spark, out_dir):
+    return {
+        r["doc_id"]: [tuple(s) for s in r["spans"]]
+        for r in spark.read.parquet(os.path.join(out_dir, "spans"))
+        .select("doc_id", "spans").collect()
+    }
+
+
+def test_stream_on_generated_corpus_matches_batch_and_resumes(spark, tmp_path):
+    """The stream over three input files (one per trigger) writes exactly
+    the batch job's spans; a restart commits nothing and adds no rows."""
+    docs_path = str(tmp_path / "docs")
+    generate_corpus(spark, 24, partitions=3, dup_frac=0.2).write.parquet(docs_path)
+
+    batch_dir = str(tmp_path / "batch")
+    run_extraction_job(spark, docs_path, batch_dir, run_id="b1", partitions=2)
+    stream_dir = str(tmp_path / "stream")
+    run_stream_extraction(
+        spark, docs_path, stream_dir, run_id="s1", max_files_per_trigger=1
+    )
+    runs = os.listdir(os.path.join(stream_dir, "spans"))
+    assert len(runs) == 3  # one run dir per micro-batch
+    stream = _spans_by_doc(spark, stream_dir)
+    assert len(stream) == 24
+    assert stream == _spans_by_doc(spark, batch_dir)
+
+    assert spark.read.parquet(os.path.join(stream_dir, "checkpoint")).count() == 24
+    run_stream_extraction(spark, docs_path, stream_dir, run_id="s2")
+    assert sorted(os.listdir(os.path.join(stream_dir, "spans"))) == sorted(runs)
+    assert spark.read.parquet(os.path.join(stream_dir, "checkpoint")).count() == 24
+    assert spark.read.parquet(os.path.join(stream_dir, "spans")).count() == 24

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.pdf.tokenizer import tokenize_pdf
-from pdf_extractor_spark import assemble
+from pdf_extractor_spark.tokenize_dispatch import assemble_doc
 
 from .conftest import FIXTURE_DIR, fixture_pdfs, requires_fixtures
 from .golden import golden_spans
@@ -52,7 +52,7 @@ def test_tokenizer_garbage_inputs():
 
 @requires_fixtures
 def test_spark_tokenize_and_assemble(spark):
-    """Full Spark path: binaryFile scan → pandas_udf → array_sort assembly →
+    """Full Spark path: binaryFile scan → fused tokenize + assembly kernel →
     public span contract equals the golden for every fixture."""
     df = (
         spark.read.format("binaryFile")
@@ -75,20 +75,16 @@ def test_spark_tokenize_and_assemble(spark):
         assert [s["offset"] for s in row["spans"]] == list(range(len(want)))
 
 
-def test_full_text_truncation(spark):
+def test_full_text_truncation():
     long_spans = [
         {"kind": "text", "text": " ".join(f"w{i}" for i in range(k, k + 100)),
          "media_ref": None, "x0": 0.0, "y0": float(10000 - k), "x1": 10.0,
          "y1": float(10000 - k) + 10.0, "size": 10.0}
         for k in range(0, 4500, 100)
     ]
-    import pandas as pd
-
-    pdf = pd.DataFrame({"spans": [long_spans]})
-    sdf = spark.createDataFrame(pdf)
-    res = sdf.select(
-        assemble.full_text(assemble.ordered_spans(F.col("spans"))).alias("t")
-    ).collect()[0]["t"]
+    res = assemble_doc(
+        {"page_width": 0.0, "page_height": 0.0, "spans": long_spans}
+    )["full_text"]
     assert res.endswith("[...texto truncado...]")
     words = res.split()
     assert words[3999] == "w3999"

@@ -321,7 +321,7 @@ def test_truncation_length_guard_boundary():
     unguarded reference semantics."""
     import re
 
-    from pdf_extractor_spark.assemble import TRUNCATE_SENTINEL, TRUNCATE_WORDS
+    from pdf_extractor_spark.tokenize_dispatch import TRUNCATE_SENTINEL, TRUNCATE_WORDS
 
     ws = re.compile(r"\s+")
 

@@ -19,7 +19,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("input", help="RAW_DOC parquet path")
     ap.add_argument("output", help="output dir (spans|results + checkpoint/)")
-    ap.add_argument("--partitions", type=int, default=64)
+    ap.add_argument("--partitions", type=int, default=64,
+                    help="spans job: width of the --dedup wide exchange")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--dedup", choices=["narrow", "wide"], default="narrow")
@@ -82,7 +83,6 @@ def main() -> None:
             args.output,
             kb=kb,
             run_id=args.run_id,
-            partitions=args.partitions,
             resume=not args.no_resume,
         )
     else:
