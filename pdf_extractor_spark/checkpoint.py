@@ -7,6 +7,9 @@ directory ``spans/run_id=<id>/`` and then commits idempotent lineage rows
 keyed ``(run_id, partition_id, doc_id)``; a restart anti-joins committed
 doc_ids.
 
+The batch, field and stream jobs share one commit sequence: :func:`pending`
+then :func:`commit`.
+
 Crash-window protocol (two non-atomic actions — spans commit, then lineage
 commit — made safe):
 
@@ -19,11 +22,8 @@ commit — made safe):
   re-extracted and the spans table holds no duplicates;
 * crash DURING the lineage commit (a multi-file parquet append is not
   atomic: some task files land, others do not) → the run has SOME
-  committed rows; :func:`write_checkpoint` is idempotent (it anti-joins
-  the run directory's doc_ids against the rows already in lineage), and
-  :func:`reconcile_checkpoint` re-runs it for any committed run whose
-  lineage row count trails its directory — the missing rows are appended,
-  never the whole run twice;
+  committed rows; :func:`reconcile_checkpoint`, the one place that probes
+  a run's existing lineage, appends exactly the missing rows;
 * crash AFTER the lineage commit but BEFORE the commit marker (below) →
   the run is unmarked, so the next reconcile recounts it once, finds its
   lineage complete and writes the marker — one recount, never a skipped
@@ -39,7 +39,10 @@ directory listing and launches no Spark job. The markers live under the
 lineage directory so that anything which removes or rewrites lineage drops
 them too, and the leading ``_`` hides them from Spark's parquet listing.
 Runs committed before markers existed are counted once, as before, and
-then marked.
+then marked. After reconcile every durable run is marked, so the run-id
+guard is one stat. ``resume=False`` skips reconcile: a crash between the
+lineage append and the marker, retried with ``resume=False`` under the
+same id, is not healed — the retry appends the run's lineage again.
 
 Per-commit cost is O(this run's output) — the previous protocol re-scanned
 the entire spans table (all runs ever written) on every commit, which is
@@ -51,10 +54,13 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
+import time
+import uuid
 from typing import List, Optional, Set
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.schema import CHECKPOINT_SCHEMA
@@ -111,9 +117,10 @@ def write_checkpoint(
     spark: SparkSession, output_dir: str, run_id: str, table: str = SPANS_DIR
 ) -> int:
     """Commit lineage for ONE run by reading back its own partition
-    directory (never the whole spans table). Idempotent: docs this run
-    already committed are anti-joined away, so a retry — or a heal after a
-    torn mid-append crash — appends only the missing rows.
+    directory (never the whole spans table); returns the run's doc count.
+    A marked run returns its directory count and reads no lineage; an
+    unmarked one appends every row (:func:`pending` anti-joined its docs,
+    and :func:`reconcile_checkpoint` heals a torn append itself).
 
     Reading the committed files (rather than trusting the in-flight
     DataFrame) makes the checkpoint reflect exactly what is durable — the
@@ -126,8 +133,22 @@ def write_checkpoint(
     run_path = spans_run_path(output_dir, run_id, table)
     if not os.path.isdir(run_path):
         return 0
-    written = spark.read.parquet(run_path)
-    lineage = written.select(
+    if os.path.exists(committed_marker_path(output_dir, run_id)):
+        return spark.read.parquet(run_path).count()
+    return _append_lineage(spark, output_dir, run_id, table)
+
+
+def _append_lineage(
+    spark: SparkSession,
+    output_dir: str,
+    run_id: str,
+    table: str,
+    committed: Optional[DataFrame] = None,
+) -> int:
+    """Append lineage rows for ``run_id``'s directory, minus the doc_ids in
+    ``committed``, then mark the run; returns the rows appended."""
+    run_path = spans_run_path(output_dir, run_id, table)
+    lineage = spark.read.parquet(run_path).select(
         F.lit(run_id).alias("run_id"),
         F.col("partition_id").cast("int").alias("partition_id"),
         F.col("doc_id"),
@@ -137,16 +158,8 @@ def write_checkpoint(
         F.col("byte_count").cast("long").alias("byte_count"),
         F.current_timestamp().alias("committed_at"),
     )
-    already_n = 0
-    ckpt = read_checkpoint(spark, output_dir)
-    if ckpt is not None:
-        already = ckpt.where(F.col("run_id") == run_id).select("doc_id")
-        if not already.isEmpty():
-            already_n = already.count()  # retry path only; ckpt is small
-            lineage = lineage.join(already, "doc_id", "left_anti")
-            if lineage.isEmpty():
-                _mark_committed(output_dir, run_id)
-                return spark.read.parquet(run_path).count()
+    if committed is not None:
+        lineage = lineage.join(committed, "doc_id", "left_anti")
     # the commit count rides the lineage write itself (observe) — the old
     # `read.parquet(run_path).count()` re-scanned the just-written output a
     # SECOND time purely to return a number; at production scale that is a
@@ -172,7 +185,7 @@ def write_checkpoint(
         pass  # permission/race on the listing — keep natural partitioning
     lineage.write.mode("append").parquet(checkpoint_path(output_dir))
     _mark_committed(output_dir, run_id)
-    return int(obs.get["n"]) + already_n
+    return int(obs.get["n"])
 
 
 def _runs_on_disk(output_dir: str, table: str = SPANS_DIR) -> List[str]:
@@ -226,14 +239,16 @@ def reconcile_checkpoint(
         if rid in committed:
             # torn lineage append (crash DURING the multi-file commit): the
             # run dir holds docs its lineage is missing — append exactly
-            # those (write_checkpoint anti-joins), else a resume would
-            # re-extract them under a new run_id and duplicate their rows.
-            # Parquet metadata makes the directory count a footer read.
-            # A complete but unmarked run (crash after the lineage append,
-            # before the marker, or lineage older than markers) is marked.
+            # those (anti-joined against the run's committed doc_ids), else
+            # a resume would re-extract them under a new run_id and
+            # duplicate their rows. Parquet metadata makes the directory
+            # count a footer read. A complete but unmarked run (crash after
+            # the lineage append, before the marker, or lineage older than
+            # markers) is marked.
             if has_success:
                 if spark.read.parquet(run_path).count() > committed[rid]:
-                    write_checkpoint(spark, output_dir, rid, table)
+                    done = ckpt.where(F.col("run_id") == rid).select("doc_id")
+                    _append_lineage(spark, output_dir, rid, table, done)
                     adopted.append(rid)
                 else:
                     _mark_committed(output_dir, rid)
@@ -244,3 +259,110 @@ def reconcile_checkpoint(
         else:
             shutil.rmtree(run_path, ignore_errors=True)
     return adopted
+
+
+def pending(
+    spark: SparkSession,
+    docs: DataFrame,
+    output_dir: str,
+    run_id: str,
+    table: str = SPANS_DIR,
+    resume: bool = True,
+    run_ids: Optional[List[str]] = None,
+) -> Optional[DataFrame]:
+    """The docs ``run_id`` has left to commit, or None when there are none.
+
+    With ``resume``: reconcile (every run of ``table``, or only ``run_ids``)
+    and anti-join the committed docs. Always: refuse a marked ``run_id`` —
+    overwriting its directory with new docs would silently lose docs that
+    lineage still marks committed."""
+    if resume:
+        reconcile_checkpoint(spark, output_dir, table, run_ids=run_ids)
+        ckpt = read_checkpoint(spark, output_dir)
+        if ckpt is not None:
+            done = ckpt.where(F.col("status") == "committed").select("doc_id")
+            docs = docs.join(done, "doc_id", "left_anti")
+            if docs.isEmpty():
+                return None
+    if os.path.exists(committed_marker_path(output_dir, run_id)):
+        raise ValueError(
+            f"run_id {run_id!r} already has committed lineage rows; "
+            "each run (or retry of an uncommitted run) must reuse the id, "
+            "but new work needs a fresh run_id"
+        )
+    return docs
+
+
+def run_stats(run_id: str, n_docs: int, t0: float, metrics: dict) -> dict:
+    elapsed = time.time() - t0
+    return {
+        "run_id": run_id,
+        "docs": n_docs,
+        "seconds": elapsed,
+        "docs_per_sec": n_docs / elapsed if elapsed > 0 else 0.0,
+        "metrics": metrics,
+    }
+
+
+def commit(
+    spark: SparkSession,
+    out: DataFrame,
+    output_dir: str,
+    run_id: str,
+    aggs: List[Column],
+    t0: float,
+    table: str = SPANS_DIR,
+) -> dict:
+    """Write ``out`` as ``run_id``'s directory, commit its lineage and
+    append its metrics rows; returns the job stats. The counters ``aggs``
+    ride the write via observe() — no second pass over the data (the
+    reference increments its stats dict per doc, extractor.py:59-66)."""
+    obs = Observation(f"{table}_{run_id}")
+    # overwrite makes a mid-write retry of the SAME run idempotent (partial
+    # files from the failed attempt are replaced, not appended to)
+    out.observe(obs, *aggs).write.mode("overwrite").parquet(
+        spans_run_path(output_dir, run_id, table)
+    )
+    metrics = dict(obs.get)
+    n_docs = write_checkpoint(spark, output_dir, run_id, table)
+    stats = run_stats(run_id, n_docs, t0, metrics)
+    _write_metrics(spark, output_dir, run_id, metrics)
+    return stats
+
+
+def _write_metrics(
+    spark: SparkSession, output_dir: str, run_id: str, metrics: dict
+) -> None:
+    """Append one run's metrics rows (METRICS_SCHEMA layout) to
+    ``{output_dir}/metrics`` as one parquet file the driver writes itself:
+    the O(1) scalars already live on the driver, and a Spark job would add
+    ~0.4 s of scheduling per run. Write-to-temp + rename keeps a crash from
+    leaving a torn file. A non-local scheme (os.makedirs on 's3a://bucket'
+    would create a literal local dir) goes through Spark's writer instead."""
+    rows = [(run_id, k, float(v if v is not None else 0)) for k, v in metrics.items()]
+    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", output_dir)
+    if m and m.group(1) != "file":
+        spark.createDataFrame(
+            rows, "run_id string, metric string, value double"
+        ).coalesce(1).write.mode("append").parquet(
+            os.path.join(output_dir, "metrics")
+        )
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    table = pa.table(
+        {
+            "run_id": pa.array([r[0] for r in rows], pa.string()),
+            "metric": pa.array([r[1] for r in rows], pa.string()),
+            "value": pa.array([r[2] for r in rows], pa.float64()),
+        }
+    )
+    metrics_dir = os.path.join(output_dir, "metrics")
+    os.makedirs(metrics_dir, exist_ok=True)
+    fname = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
+    final = os.path.join(metrics_dir, fname)
+    # leading dot: Spark's FileIndex skips hidden files, so a crash that
+    # orphans the temp never breaks later reads of the directory
+    tmp = os.path.join(metrics_dir, "." + fname + ".tmp")
+    pq.write_table(table, tmp, compression="zstd")
+    os.replace(tmp, final)

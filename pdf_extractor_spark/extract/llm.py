@@ -191,10 +191,10 @@ def llm_stage(
     )
 
 
-def cost_summary(df: DataFrame, group_cols: Optional[list] = None) -> DataFrame:
-    """F10: aggregate per-call token/cost columns into run metrics
-    (extractor.py:443-446 accrues the same sums into stats['total_cost'])."""
-    aggs = [
+def cost_aggs() -> list:
+    """F10: the per-call token/cost aggregates of a run (extractor.py:443-446
+    accrues the same sums into stats['total_cost'])."""
+    return [
         # token columns are the call record (zero-cost heuristic rows carry
         # 0/0): out>0 = answered call; in>0 with out=0 = failed/refused call
         F.count(F.when(F.col("llm_out_tokens") > 0, 1)).alias("llm_calls"),
@@ -207,9 +207,13 @@ def cost_summary(df: DataFrame, group_cols: Optional[list] = None) -> DataFrame:
         F.sum("llm_out_tokens").alias("llm_out_tokens"),
         F.sum("llm_cost").alias("llm_total_cost"),
     ]
+
+
+def cost_summary(df: DataFrame, group_cols: Optional[list] = None) -> DataFrame:
+    """F10: :func:`cost_aggs` over ``df``, optionally per group."""
     if group_cols:
-        return df.groupBy(*group_cols).agg(*aggs)
-    return df.agg(*aggs)
+        return df.groupBy(*group_cols).agg(*cost_aggs())
+    return df.agg(*cost_aggs())
 
 
 def replay_response(values: Dict[str, Optional[str]], template_fixo: Optional[bool] = None) -> str:

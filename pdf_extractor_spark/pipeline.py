@@ -25,7 +25,6 @@ Plans (``extract_spans(dedup=...)``):
 from __future__ import annotations
 
 import os
-import re
 import time
 import uuid
 from typing import Optional
@@ -322,67 +321,22 @@ def lineage_projection(result: DataFrame) -> DataFrame:
     )
 
 
-def _guard_run_id_unused(ckpt: Optional[DataFrame], run_id: str) -> None:
-    """Refuse to reuse a run_id that already committed docs.
-
-    The per-run directory is written with mode("overwrite") so a mid-write
-    retry of the SAME attempt is idempotent — but reusing a committed
-    run_id against NEW input would overwrite the old run's spans with only
-    the new docs while lineage still marks the old docs committed: silent
-    permanent data loss. A committed run_id is therefore sealed."""
-    if ckpt is None:
-        return
-    if not ckpt.where(F.col("run_id") == run_id).isEmpty():
-        raise ValueError(
-            f"run_id {run_id!r} already has committed lineage rows; "
-            "each run (or retry of an uncommitted run) must reuse the id, "
-            "but new work needs a fresh run_id"
-        )
-
-
-def _write_metrics(output_dir: str, run_id: str, metrics: dict) -> None:
-    """Append one run's metrics rows (METRICS_SCHEMA layout) to
-    ``{output_dir}/metrics`` as a single parquet part file written directly
-    by the driver. The metrics are O(1) scalars per run and already live on
-    the driver (``Observation.get``), so routing them through a Spark job
-    is pure scheduling overhead (~0.4 s/run measured) for a 6-row write; a
-    real cluster's driver does the same one-small-file put to object
-    storage. Write-to-temp + rename keeps a crash from leaving a torn file
-    that would poison later ``spark.read.parquet`` over the directory.
-
-    The direct write requires a LOCAL output_dir (os.makedirs on
-    's3a://bucket' would silently create a literal './s3a:/bucket' dir);
-    any scheme other than file: routes through Spark's Hadoop-FS writer
-    instead — the ~0.4 s of scheduling is the correct price for a
-    filesystem the driver cannot os.replace() on."""
-    rows = [(run_id, k, float(v if v is not None else 0)) for k, v in metrics.items()]
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", output_dir)
-    if m and m.group(1) != "file":
-        spark = SparkSession.getActiveSession()
-        spark.createDataFrame(
-            rows, "run_id string, metric string, value double"
-        ).coalesce(1).write.mode("append").parquet(
-            os.path.join(output_dir, "metrics")
-        )
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    table = pa.table(
-        {
-            "run_id": pa.array([r[0] for r in rows], pa.string()),
-            "metric": pa.array([r[1] for r in rows], pa.string()),
-            "value": pa.array([r[2] for r in rows], pa.float64()),
-        }
-    )
-    metrics_dir = os.path.join(output_dir, "metrics")
-    os.makedirs(metrics_dir, exist_ok=True)
-    fname = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
-    final = os.path.join(metrics_dir, fname)
-    # leading dot: Spark's FileIndex skips hidden files, so a crash that
-    # orphans the temp never breaks later reads of the directory
-    tmp = os.path.join(metrics_dir, "." + fname + ".tmp")
-    pq.write_table(table, tmp, compression="zstd")
-    os.replace(tmp, final)
+def span_metrics() -> list:
+    """The A3/A5 run counters of a spans run, observed on its write (the
+    batch job and every stream micro-batch commit the same rows)."""
+    return [
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("span_count").alias("spans"),
+        F.sum(F.when(F.col("span_count") == 0, 1).otherwise(0)).alias("empty_docs"),
+        # Identity-H runs without /ToUnicode surface as kind='unparsed'
+        # spans (tokenizer.py IdentityCIDEncoding) — counted here so a
+        # corpus owner sees how much content the text layer could not
+        # recover instead of reading a silently smaller span count
+        F.sum(
+            F.size(F.filter("spans", lambda s: s["kind"] == F.lit("unparsed")))
+        ).alias("unparsed_spans"),
+        F.approx_count_distinct("content_hash").alias("approx_distinct"),
+    ]
 
 
 def run_extraction_job(
@@ -405,67 +359,25 @@ def run_extraction_job(
     adopted into lineage — never re-extracted, never duplicated), then
     anti-joins committed docs. If nothing is left to do the run directory
     is not touched (a retry after a successful commit must not erase it).
+    New docs under a committed ``run_id`` raise, with or without ``resume``
+    (``resume=False`` skips crash healing; see checkpoint.py).
     """
-    from pdf_extractor_spark.checkpoint import (
-        read_checkpoint, reconcile_checkpoint, spans_run_path, write_checkpoint,
-    )
+    from pdf_extractor_spark import checkpoint
 
     run_id = run_id or uuid.uuid4().hex
     docs = spark.read.parquet(input_path)
     t0 = time.time()
-    ckpt = None
-    if resume:
-        reconcile_checkpoint(spark, output_dir)
-        ckpt = read_checkpoint(spark, output_dir)
-    if ckpt is not None:
-        done = ckpt.where(F.col("status") == "committed").select("doc_id")
-        docs = docs.join(done, "doc_id", "left_anti")
-        if docs.isEmpty():
-            return {
-                "run_id": run_id, "docs": 0, "seconds": time.time() - t0,
-                "docs_per_sec": 0.0, "metrics": {"docs": 0},
-            }
-        _guard_run_id_unused(ckpt, run_id)
+    docs = checkpoint.pending(spark, docs, output_dir, run_id, resume=resume)
+    if docs is None:
+        return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
     # spans-only job → push the public projection into the kernel (geometry
     # and full_text never cross Arrow; full_text is derivable from spans).
     result = extract_spans(
         docs, partitions=partitions, dedup=dedup, columns="public"
     )
-    out = lineage_projection(result)
-    # A3/A5 run counters ride the job itself via observe() — no second pass
-    # over the data (the reference increments its stats dict per doc,
-    # extractor.py:59-66; here the executors aggregate for free).
-    from pyspark.sql import Observation
-
-    obs = Observation(f"extract_{run_id}")
-    out = out.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("span_count").alias("spans"),
-        F.sum(F.when(F.col("span_count") == 0, 1).otherwise(0)).alias("empty_docs"),
-        # Identity-H runs without /ToUnicode surface as kind='unparsed'
-        # spans (tokenizer.py IdentityCIDEncoding) — counted here so a
-        # corpus owner sees how much content the text layer could not
-        # recover instead of reading a silently smaller span count
-        F.sum(
-            F.size(F.filter("spans", lambda s: s["kind"] == F.lit("unparsed")))
-        ).alias("unparsed_spans"),
-        F.approx_count_distinct("content_hash").alias("approx_distinct"),
+    return checkpoint.commit(
+        spark, lineage_projection(result), output_dir, run_id, span_metrics(), t0
     )
-    # overwrite makes a mid-write retry of the SAME run idempotent (partial
-    # files from the failed attempt are replaced, not appended to)
-    out.write.mode("overwrite").parquet(spans_run_path(output_dir, run_id))
-    metrics = dict(obs.get)
-    n_docs = write_checkpoint(spark, output_dir, run_id)
-    elapsed = time.time() - t0
-    _write_metrics(output_dir, run_id, metrics)
-    return {
-        "run_id": run_id,
-        "docs": n_docs,
-        "seconds": elapsed,
-        "docs_per_sec": n_docs / elapsed if elapsed > 0 else 0.0,
-        "metrics": metrics,
-    }
 
 
 def run_field_extraction_job(
@@ -494,26 +406,18 @@ def run_field_extraction_job(
     ``replay`` is the canned-LLM response table (extract.llm); None runs
     pure-deterministic (bootstraps learn from U6 only, failures stay null).
     """
-    from pdf_extractor_spark.checkpoint import (
-        read_checkpoint, reconcile_checkpoint, spans_run_path, write_checkpoint,
-    )
-    from pdf_extractor_spark.extract.llm import cost_summary
+    from pdf_extractor_spark import checkpoint
+    from pdf_extractor_spark.extract.llm import cost_aggs
     from pdf_extractor_spark.extract.repair import extract_planned
 
     run_id = run_id or uuid.uuid4().hex
     t0 = time.time()
     docs = spark.read.parquet(input_path)
-    ckpt = None
-    if resume:
-        reconcile_checkpoint(spark, output_dir, table="results")
-        ckpt = read_checkpoint(spark, output_dir)
-    if ckpt is not None:
-        done = ckpt.where(F.col("status") == "committed").select("doc_id")
-        docs = docs.join(done, "doc_id", "left_anti")
-        if docs.isEmpty():
-            return {"run_id": run_id, "docs": 0,
-                    "seconds": time.time() - t0, "metrics": {}}
-        _guard_run_id_unused(ckpt, run_id)
+    docs = checkpoint.pending(
+        spark, docs, output_dir, run_id, table="results", resume=resume
+    )
+    if docs is None:
+        return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
     if kb is None:
         kb = _read_kb_state(spark, output_dir)
 
@@ -546,38 +450,16 @@ def run_field_extraction_job(
     # against the already-updated KB (idempotent — the repaired rules
     # re-derive to themselves).
     _swap_kb_state(spark, output_dir, kb_out)
-    out.write.mode("overwrite").parquet(
-        spans_run_path(output_dir, run_id, table="results")
+    # A3 counters + F10 cost columns ride the results write (observe)
+    stats = checkpoint.commit(
+        spark, out, output_dir, run_id,
+        [F.count(F.lit(1)).alias("docs"),
+         F.sum("span_count").alias("fields_extracted"), *cost_aggs()],
+        t0, table="results",
     )
-    n_docs = write_checkpoint(spark, output_dir, run_id, table="results")
     # results + KB + lineage are durable — release every frame the planner
     # pinned (tokenized plus the repair/bootstrap stage caches), so repeated
     # jobs in a long-lived session don't accrete storage memory
     for cached in caches:
         cached.unpersist()
-    committed_results = spark.read.parquet(
-        spans_run_path(output_dir, run_id, table="results")
-    )
-
-    # metrics: A3 counters + F10 cost columns in one append
-    cost = cost_summary(committed_results).collect()[0].asDict()
-    metrics = {
-        "docs": float(n_docs),
-        "fields_extracted": float(
-            committed_results.agg(F.sum("span_count")).first()[0] or 0
-        ),
-        "llm_calls": float(cost["llm_calls"] or 0),
-        "llm_failures": float(cost["llm_failures"] or 0),
-        "llm_in_tokens": float(cost["llm_in_tokens"] or 0),
-        "llm_out_tokens": float(cost["llm_out_tokens"] or 0),
-        "llm_total_cost": float(cost["llm_total_cost"] or 0.0),
-    }
-    _write_metrics(output_dir, run_id, metrics)
-    elapsed = time.time() - t0
-    return {
-        "run_id": run_id,
-        "docs": n_docs,
-        "seconds": elapsed,
-        "docs_per_sec": n_docs / elapsed if elapsed > 0 else 0.0,
-        "metrics": metrics,
-    }
+    return stats

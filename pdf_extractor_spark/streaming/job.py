@@ -16,7 +16,9 @@ Two checkpoint layers cooperate:
   (ST4);
 * our lineage table (checkpoint.py) records per-document commits so batch
   and streaming runs share one resume/metrics protocol (ST3/S8) and a batch
-  job can take over where a stream stopped, or vice versa.
+  job can take over where a stream stopped, or vice versa. Each
+  micro-batch is run ``<run_id>_b<batch_id>``, committed by the batch job's
+  own ``checkpoint.pending`` + ``checkpoint.commit``.
 
 The source is the parquet file source over the RAW_DOC schema; no table
 catalog (Iceberg or otherwise) is wired. Late data / watermarks are N/A
@@ -27,13 +29,15 @@ mirrors the reference's per-document semantics.
 from __future__ import annotations
 
 import os
+import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
-from pdf_extractor_spark.pipeline import extract_spans, lineage_projection
+from pdf_extractor_spark.pipeline import (
+    extract_spans, lineage_projection, span_metrics,
+)
 
 
 def read_doc_stream(
@@ -60,13 +64,14 @@ def run_stream_extraction(
     """availableNow streaming job: process all files present, then stop.
 
     Each micro-batch goes through the batch stages and commits spans +
-    lineage atomically-per-partition via foreachBatch (ST1/ST3). Restarting
+    lineage + metrics as one run via foreachBatch (ST1/ST3). Restarting
     with the same output_dir skips already-committed batches (Spark source
     checkpoint) AND already-committed docs (lineage anti-join — belt and
-    braces, since foreachBatch is at-least-once on retry)."""
-    from pdf_extractor_spark.checkpoint import (
-        read_checkpoint, reconcile_checkpoint, spans_run_path, write_checkpoint,
-    )
+    braces, since foreachBatch is at-least-once on retry). A committed
+    batch-run id is sealed: a restart that lost its source checkpoint and
+    replays new docs under the same ``run_id`` fails with "committed
+    lineage" instead of overwriting the committed batch's spans."""
+    from pdf_extractor_spark import checkpoint
 
     stream = read_doc_stream(spark, input_path, max_files_per_trigger)
 
@@ -75,39 +80,24 @@ def run_stream_extraction(
     # without a Spark job; each unmarked run costs a full-lineage aggregate
     # plus a count job. Inside each trigger only the current batch-run is
     # reconciled — a foreachBatch retry can only have torn its OWN run dir.
-    reconcile_checkpoint(spark, output_dir)
+    checkpoint.reconcile_checkpoint(spark, output_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # reconcile this batch's run first: a retry that died between the
-        # spans commit and the lineage commit must adopt the durable run,
-        # not re-extract it; one that died DURING the lineage append heals
-        # by appending only the missing rows (the at-least-once windows)
-        reconcile_checkpoint(spark, output_dir, run_ids=[f"{run_id}_b{batch_id}"])
-        ckpt = read_checkpoint(spark, output_dir)
+        # reconciling this batch's own run heals a retry that died after its
+        # spans write (never re-extracted); a committed batch dir is never
+        # rewritten — the anti-join empties it, or the run-id guard raises
+        t0 = time.time()
         batch_run = f"{run_id}_b{batch_id}"
-        if ckpt is not None:
-            done = ckpt.where(F.col("status") == "committed").select("doc_id")
-            batch_df = batch_df.join(done, "doc_id", "left_anti")
-            if batch_df.isEmpty():
-                return  # fully committed batch — never touch its run dir
-        # A durable run dir from a prior attempt of THIS batch must never be
-        # rewritten: mode('overwrite') over a partially-committed batch would
-        # delete spans its lineage already marks committed (permanent loss).
-        # _SUCCESS means the prior attempt's write job committed in full, so
-        # the only thing possibly missing is lineage — derive it from the
-        # directory (write_checkpoint anti-joins the already-committed rows)
-        # instead of re-extracting.
-        if os.path.exists(
-            os.path.join(spans_run_path(output_dir, batch_run), "_SUCCESS")
-        ):
-            write_checkpoint(spark, output_dir, batch_run)
-            return
+        todo = checkpoint.pending(
+            spark, batch_df, output_dir, batch_run, run_ids=[batch_run]
+        )
+        if todo is None:
+            return  # fully committed batch — never touch its run dir
         # spans-only sink → kernel-level projection pushdown, same as the
         # batch path (geometry/full_text never cross Arrow); the sink
         # columns come from the SAME projection the batch job writes
-        out = lineage_projection(extract_spans(batch_df, columns="public"))
-        out.write.mode("overwrite").parquet(spans_run_path(output_dir, batch_run))
-        write_checkpoint(spark, output_dir, batch_run)
+        out = lineage_projection(extract_spans(todo, columns="public"))
+        checkpoint.commit(spark, out, output_dir, batch_run, span_metrics(), t0)
 
     query = (
         stream.writeStream.foreachBatch(process_batch)

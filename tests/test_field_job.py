@@ -68,6 +68,7 @@ def test_field_job_end_to_end_with_repair(spark, tmp_path):
     assert metrics["llm_calls"] >= 1.0
     assert metrics["llm_total_cost"] > 0.0
     assert metrics["fields_extracted"] == 3.0
+    assert metrics["docs"] == 3.0
 
     # resume: everything committed → no-op
     s2 = run_field_extraction_job(

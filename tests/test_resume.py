@@ -319,3 +319,83 @@ def test_commit_markers_invisible_to_lineage_readers(spark, tmp_path):
     )
     assert read_checkpoint(spark, out_dir).count() == 30
     assert spark.read.parquet(checkpoint_path(out_dir)).count() == 30
+
+
+def _write_shard(spark, tmp_path, name, lo, hi, n_docs):
+    """Docs ``lo..hi-1`` of one ``n_docs`` corpus as their own input."""
+    path = str(tmp_path / name)
+    generate_corpus(spark, n_docs, partitions=2).where(
+        (F.col("doc_id") >= f"doc_{lo:09d}") & (F.col("doc_id") < f"doc_{hi:09d}")
+    ).write.parquet(path)
+    return path
+
+
+def test_resume_false_refuses_committed_run_id(spark, tmp_path):
+    """``resume=False`` skips reconcile and the anti-join but not the run-id
+    guard: reusing a committed id on new docs raises, and the committed
+    run's spans and lineage stay as they were."""
+    import pytest
+
+    from pdf_extractor_spark.checkpoint import read_checkpoint
+
+    out_dir = str(tmp_path / "out")
+    first = _write_shard(spark, tmp_path, "first", 0, 10, 20)
+    run_extraction_job(spark, first, out_dir, run_id="r1", partitions=2)
+    before = _span_fingerprint(spark, out_dir)
+    assert len(before) == 10
+
+    new = _write_shard(spark, tmp_path, "new", 10, 20, 20)
+    with pytest.raises(ValueError, match="committed lineage"):
+        run_extraction_job(
+            spark, new, out_dir, run_id="r1", partitions=2, resume=False
+        )
+    assert _span_fingerprint(spark, out_dir) == before
+    assert read_checkpoint(spark, out_dir).count() == 10
+
+
+def test_reused_run_id_whose_dir_is_gone_commits_only_new_docs(spark, tmp_path):
+    """A committed run whose directory and marker were both deleted leaves
+    lineage rows only. Reusing its id on a corpus holding its docs plus new
+    ones commits exactly the new docs: the resume anti-join drops the old
+    ones, and the lineage append adds each new doc once."""
+    import shutil
+
+    from pdf_extractor_spark.checkpoint import (
+        committed_marker_path, read_checkpoint, spans_run_path,
+    )
+
+    out_dir = str(tmp_path / "out")
+    first = _write_shard(spark, tmp_path, "first", 0, 10, 20)
+    run_extraction_job(spark, first, out_dir, run_id="r1", partitions=2)
+    shutil.rmtree(spans_run_path(out_dir, "r1"))
+    os.remove(committed_marker_path(out_dir, "r1"))
+
+    every = _write_shard(spark, tmp_path, "every", 0, 20, 20)
+    s = run_extraction_job(spark, every, out_dir, run_id="r1", partitions=2)
+    assert s["docs"] == 10
+    spans = spark.read.parquet(spans_run_path(out_dir, "r1"))
+    assert {r["doc_id"] for r in spans.select("doc_id").collect()} == {
+        f"doc_{i:09d}" for i in range(10, 20)
+    }
+    ckpt = read_checkpoint(spark, out_dir)
+    assert ckpt.count() == 20
+    assert ckpt.select("doc_id").distinct().count() == 20
+
+
+def test_fresh_commit_job_budget(spark, tmp_path):
+    """One fresh commit of 40 new docs beside three committed runs: the
+    run-id guard is a marker stat and the lineage append probes nothing,
+    so the job launches 7 Spark jobs (9 with a lineage scan for the guard
+    and an already-committed probe before the append)."""
+    _, out_dir = _commit_runs(spark, tmp_path, 3)
+    new = _write_shard(spark, tmp_path, "new40", 30, 70, 70)
+
+    stats = {}
+
+    def run():
+        stats.update(run_extraction_job(spark, new, out_dir, run_id="r3",
+                                        partitions=2))
+
+    jobs = _jobs_under_group(spark, "fresh-commit", run)
+    assert stats["docs"] == 40
+    assert len(jobs) == 7

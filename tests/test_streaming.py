@@ -84,3 +84,45 @@ def test_stream_on_generated_corpus_matches_batch_and_resumes(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(stream_dir, "spans"))) == sorted(runs)
     assert spark.read.parquet(os.path.join(stream_dir, "checkpoint")).count() == 24
     assert spark.read.parquet(os.path.join(stream_dir, "spans")).count() == 24
+
+    # each micro-batch run wrote the batch job's metrics rows, once
+    docs = {
+        r["run_id"]: r["value"]
+        for r in spark.read.parquet(os.path.join(stream_dir, "metrics"))
+        .where("metric = 'docs'").collect()
+    }
+    assert sorted(f"run_id={rid}" for rid in docs) == sorted(runs)
+    assert sum(docs.values()) == 24
+
+
+def test_stream_refuses_reused_run_id_on_new_docs(spark, tmp_path):
+    """A restart that lost its source checkpoint replays every file, new
+    ones included, under the same batch-run id: the committed ``s_b0`` must
+    be refused, not half-committed, and the first run's rows stay as they
+    were."""
+    import shutil
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    docs_path = str(tmp_path / "docs")
+    corpus = generate_corpus(spark, 30, partitions=2)
+    corpus.where(F.col("doc_id") < "doc_000000020").write.parquet(docs_path)
+    out_dir = str(tmp_path / "out")
+    run_stream_extraction(spark, docs_path, out_dir, run_id="s")
+
+    def counts():
+        return tuple(
+            spark.read.parquet(os.path.join(out_dir, t)).count()
+            for t in ("spans", "checkpoint")
+        )
+
+    assert counts() == (20, 20)
+    shutil.rmtree(os.path.join(out_dir, "_stream_checkpoint"))
+    corpus.where(F.col("doc_id") >= "doc_000000020").coalesce(1).write.mode(
+        "append"
+    ).parquet(docs_path)
+    with pytest.raises(StreamingQueryException, match="committed lineage"):
+        run_stream_extraction(spark, docs_path, out_dir, run_id="s")
+    assert counts() == (20, 20)
