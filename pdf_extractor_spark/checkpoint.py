@@ -44,6 +44,21 @@ guard is one stat. ``resume=False`` skips reconcile: a crash between the
 lineage append and the marker, retried with ``resume=False`` under the
 same id, is not healed — the retry appends the run's lineage again.
 
+Input keys: a retry over an input that is already committed returns
+without a Spark job, as the reference skips requests already in its output
+(batch_extract.py:99-107). The key of an input (:func:`input_key`) is a
+sha256 over its file listing, one ``path\tsize\tmtime_ns`` line per file.
+:func:`commit` writes a zero-byte ``checkpoint/_inputs/<key>`` file once
+the run's lineage and marker are durable, and :func:`pending` writes it
+when the resume anti-join finds nothing left, so outputs older than keys,
+and runs that reconcile adopted, get their key on the first no-op retry.
+A resume that finds the key stops after reconcile and reads no lineage.
+Keys live under the lineage directory, as the markers do: anything that
+removes lineage removes the keys with it. This is sound because lineage
+only grows. It assumes inputs are immutable: a file rewritten in place
+with the same size and mtime is not detected, which is the assumption
+Spark's file source makes too.
+
 Per-commit cost is O(this run's output) — the previous protocol re-scanned
 the entire spans table (all runs ever written) on every commit, which is
 unbounded for a long-lived stream. The lineage ``partition_id`` is recorded
@@ -53,21 +68,24 @@ write job), not re-derived at read time."""
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import re
 import shutil
 import time
 import uuid
 from typing import List, Optional, Set
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.schema import CHECKPOINT_SCHEMA
+from pdf_extractor_spark.schema import CHECKPOINT_SCHEMA, RUN_LINEAGE_SCHEMA
 
 CHECKPOINT_DIR = "checkpoint"
 SPANS_DIR = "spans"
 COMMITTED_DIR = "_committed"
+INPUTS_DIR = "_inputs"
 
 
 def checkpoint_path(output_dir: str) -> str:
@@ -86,11 +104,14 @@ def committed_marker_path(output_dir: str, run_id: str) -> str:
     return os.path.join(checkpoint_path(output_dir), COMMITTED_DIR, run_id)
 
 
-def _mark_committed(output_dir: str, run_id: str) -> None:
-    """Record that ``run_id``'s lineage is complete (zero-byte marker)."""
-    path = committed_marker_path(output_dir, run_id)
+def _touch(path: str) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     open(path, "wb").close()
+
+
+def _mark_committed(output_dir: str, run_id: str) -> None:
+    """Record that ``run_id``'s lineage is complete (zero-byte marker)."""
+    _touch(committed_marker_path(output_dir, run_id))
 
 
 def _marked_runs(output_dir: str) -> Set[str]:
@@ -99,6 +120,44 @@ def _marked_runs(output_dir: str) -> Set[str]:
         return set(os.listdir(marker_dir))
     except FileNotFoundError:
         return set()
+
+
+def input_key(docs: DataFrame) -> Optional[str]:
+    """The key of the files ``docs`` scans (module docstring), or None when
+    it lists no file or any file is not a local ``file:`` path.
+
+    ``docs`` must be a job's bare input scan: the key stands for every doc
+    of those files, so a filtered or sampled frame must never be keyed."""
+    lines = []
+    for uri in docs.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme != "file":
+            return None
+        path = unquote(parsed.path)
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        lines.append(f"{path}\t{st.st_size}\t{st.st_mtime_ns}")
+    if not lines:
+        return None
+    return hashlib.sha256("\n".join(sorted(lines)).encode()).hexdigest()
+
+
+def input_key_path(output_dir: str, key: str) -> str:
+    return os.path.join(checkpoint_path(output_dir), INPUTS_DIR, key)
+
+
+def _mark_input(output_dir: str, key: Optional[str]) -> None:
+    """Record that every doc of the input keyed ``key`` is committed."""
+    if key is not None:
+        _touch(input_key_path(output_dir, key))
+
+
+def _read_run(spark: SparkSession, run_path: str) -> DataFrame:
+    """A run directory's lineage columns; the schema spares the
+    schema-inference job a bare ``spark.read.parquet`` launches."""
+    return spark.read.schema(RUN_LINEAGE_SCHEMA).parquet(run_path)
 
 
 def read_checkpoint(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
@@ -134,7 +193,7 @@ def write_checkpoint(
     if not os.path.isdir(run_path):
         return 0
     if os.path.exists(committed_marker_path(output_dir, run_id)):
-        return spark.read.parquet(run_path).count()
+        return _read_run(spark, run_path).count()
     return _append_lineage(spark, output_dir, run_id, table)
 
 
@@ -148,14 +207,14 @@ def _append_lineage(
     """Append lineage rows for ``run_id``'s directory, minus the doc_ids in
     ``committed``, then mark the run; returns the rows appended."""
     run_path = spans_run_path(output_dir, run_id, table)
-    lineage = spark.read.parquet(run_path).select(
+    lineage = _read_run(spark, run_path).select(
         F.lit(run_id).alias("run_id"),
-        F.col("partition_id").cast("int").alias("partition_id"),
-        F.col("doc_id"),
-        F.col("content_hash"),
+        "partition_id",
+        "doc_id",
+        "content_hash",
         F.lit("committed").alias("status"),
-        F.col("span_count").cast("int").alias("span_count"),
-        F.col("byte_count").cast("long").alias("byte_count"),
+        "span_count",
+        "byte_count",
         F.current_timestamp().alias("committed_at"),
     )
     if committed is not None:
@@ -246,7 +305,7 @@ def reconcile_checkpoint(
             # the lineage append, before the marker, or lineage older than
             # markers) is marked.
             if has_success:
-                if spark.read.parquet(run_path).count() > committed[rid]:
+                if _read_run(spark, run_path).count() > committed[rid]:
                     done = ckpt.where(F.col("run_id") == rid).select("doc_id")
                     _append_lineage(spark, output_dir, rid, table, done)
                     adopted.append(rid)
@@ -269,20 +328,26 @@ def pending(
     table: str = SPANS_DIR,
     resume: bool = True,
     run_ids: Optional[List[str]] = None,
+    key: Optional[str] = None,
 ) -> Optional[DataFrame]:
     """The docs ``run_id`` has left to commit, or None when there are none.
 
-    With ``resume``: reconcile (every run of ``table``, or only ``run_ids``)
-    and anti-join the committed docs. Always: refuse a marked ``run_id`` —
+    With ``resume``: reconcile (every run of ``table``, or only ``run_ids``);
+    if the input ``key`` (:func:`input_key` of ``docs``) is recorded, stop
+    there, before any Spark job; else anti-join the committed docs, and
+    record ``key`` when none is left. Always: refuse a marked ``run_id`` —
     overwriting its directory with new docs would silently lose docs that
     lineage still marks committed."""
     if resume:
         reconcile_checkpoint(spark, output_dir, table, run_ids=run_ids)
+        if key is not None and os.path.exists(input_key_path(output_dir, key)):
+            return None
         ckpt = read_checkpoint(spark, output_dir)
         if ckpt is not None:
             done = ckpt.where(F.col("status") == "committed").select("doc_id")
             docs = docs.join(done, "doc_id", "left_anti")
             if docs.isEmpty():
+                _mark_input(output_dir, key)
                 return None
     if os.path.exists(committed_marker_path(output_dir, run_id)):
         raise ValueError(
@@ -312,11 +377,15 @@ def commit(
     aggs: List[Column],
     t0: float,
     table: str = SPANS_DIR,
+    key: Optional[str] = None,
 ) -> dict:
     """Write ``out`` as ``run_id``'s directory, commit its lineage and
     append its metrics rows; returns the job stats. The counters ``aggs``
     ride the write via observe() — no second pass over the data (the
-    reference increments its stats dict per doc, extractor.py:59-66)."""
+    reference increments its stats dict per doc, extractor.py:59-66).
+    Once lineage and marker are durable, the input ``key`` is recorded:
+    pass one only when ``out`` holds every doc of the keyed input that
+    :func:`pending` left."""
     obs = Observation(f"{table}_{run_id}")
     # overwrite makes a mid-write retry of the SAME run idempotent (partial
     # files from the failed attempt are replaced, not appended to)
@@ -325,6 +394,7 @@ def commit(
     )
     metrics = dict(obs.get)
     n_docs = write_checkpoint(spark, output_dir, run_id, table)
+    _mark_input(output_dir, key)
     stats = run_stats(run_id, n_docs, t0, metrics)
     _write_metrics(spark, output_dir, run_id, metrics)
     return stats

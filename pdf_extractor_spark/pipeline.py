@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.schema import METRICS_SCHEMA  # noqa: F401 (public)
+from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
 
 SESSION_DEFAULTS = {
     # local-mode: driver JVM hosts all executor threads. Multi-MB binary
@@ -359,15 +360,20 @@ def run_extraction_job(
     adopted into lineage — never re-extracted, never duplicated), then
     anti-joins committed docs. If nothing is left to do the run directory
     is not touched (a retry after a successful commit must not erase it).
+    A retry over an input file listing that is already committed returns
+    before any Spark job (checkpoint.py, "Input keys").
     New docs under a committed ``run_id`` raise, with or without ``resume``
     (``resume=False`` skips crash healing; see checkpoint.py).
     """
     from pdf_extractor_spark import checkpoint
 
     run_id = run_id or uuid.uuid4().hex
-    docs = spark.read.parquet(input_path)
+    docs = spark.read.schema(RAW_DOC_SCHEMA).parquet(input_path)
     t0 = time.time()
-    docs = checkpoint.pending(spark, docs, output_dir, run_id, resume=resume)
+    key = checkpoint.input_key(docs)
+    docs = checkpoint.pending(
+        spark, docs, output_dir, run_id, resume=resume, key=key
+    )
     if docs is None:
         return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
     # spans-only job → push the public projection into the kernel (geometry
@@ -376,7 +382,8 @@ def run_extraction_job(
         docs, partitions=partitions, dedup=dedup, columns="public"
     )
     return checkpoint.commit(
-        spark, lineage_projection(result), output_dir, run_id, span_metrics(), t0
+        spark, lineage_projection(result), output_dir, run_id, span_metrics(),
+        t0, key=key,
     )
 
 
@@ -412,9 +419,11 @@ def run_field_extraction_job(
 
     run_id = run_id or uuid.uuid4().hex
     t0 = time.time()
-    docs = spark.read.parquet(input_path)
+    docs = spark.read.schema(RAW_DOC_SCHEMA).parquet(input_path)
+    key = checkpoint.input_key(docs)
     docs = checkpoint.pending(
-        spark, docs, output_dir, run_id, table="results", resume=resume
+        spark, docs, output_dir, run_id, table="results", resume=resume,
+        key=key,
     )
     if docs is None:
         return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
@@ -455,7 +464,7 @@ def run_field_extraction_job(
         spark, out, output_dir, run_id,
         [F.count(F.lit(1)).alias("docs"),
          F.sum("span_count").alias("fields_extracted"), *cost_aggs()],
-        t0, table="results",
+        t0, table="results", key=key,
     )
     # results + KB + lineage are durable — release every frame the planner
     # pinned (tokenized plus the repair/bootstrap stage caches), so repeated

@@ -131,6 +131,18 @@ CHECKPOINT_SCHEMA = StructType(
     ]
 )
 
+# The columns of a run directory that lineage is built from: both sinks
+# (spans and field results) write them next to their payload.
+RUN_LINEAGE_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("content_hash", StringType()),
+        StructField("partition_id", IntegerType()),
+        StructField("span_count", IntegerType()),
+        StructField("byte_count", LongType()),
+    ]
+)
+
 # Run-level metrics (mirror of extractor.py:59-66 stats counters).
 METRICS_SCHEMA = StructType(
     [

@@ -12,6 +12,7 @@ from pdf_extractor_spark.extract.llm import replay_response
 from pdf_extractor_spark.kb import kb_df
 from pdf_extractor_spark.pipeline import run_field_extraction_job
 from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
+from tests.test_resume import _jobs_under_group
 
 FIELDS = {"Registro": "55123", "Cidade": "Londrina"}
 
@@ -70,11 +71,21 @@ def test_field_job_end_to_end_with_repair(spark, tmp_path):
     assert metrics["fields_extracted"] == 3.0
     assert metrics["docs"] == 3.0
 
-    # resume: everything committed → no-op
-    s2 = run_field_extraction_job(
-        spark, docs_path, out_dir, replay=replay, run_id="r2"
-    )
+    # resume: the same input is keyed as committed → a no-op that launches
+    # no Spark job and leaves the KB as it was
+    def kb_files():
+        kb_dir = os.path.join(out_dir, "kb")
+        return {(f, os.stat(os.path.join(kb_dir, f)).st_mtime_ns)
+                for f in os.listdir(kb_dir)}
+
+    kb_before = kb_files()
+    s2 = {}
+    jobs = _jobs_under_group(spark, "field-noop", lambda: s2.update(
+        run_field_extraction_job(spark, docs_path, out_dir, replay=replay,
+                                 run_id="r2")))
     assert s2["docs"] == 0
+    assert jobs == []
+    assert kb_files() == kb_before
     assert spark.read.parquet(os.path.join(out_dir, "results")).count() == 3
 
 

@@ -307,8 +307,9 @@ def test_steady_state_reconcile_launches_no_spark_job(spark, tmp_path):
 
 
 def test_commit_markers_invisible_to_lineage_readers(spark, tmp_path):
-    """The ``_committed`` marker dir under the lineage table is hidden from
-    Spark's parquet listing: every reader sees exactly the committed rows."""
+    """The ``_committed`` marker and ``_inputs`` key dirs under the lineage
+    table are hidden from Spark's parquet listing: every reader sees
+    exactly the committed rows."""
     from pdf_extractor_spark.checkpoint import (
         checkpoint_path, committed_marker_path, read_checkpoint,
     )
@@ -317,6 +318,7 @@ def test_commit_markers_invisible_to_lineage_readers(spark, tmp_path):
     assert all(
         os.path.isfile(committed_marker_path(out_dir, f"r{i}")) for i in range(3)
     )
+    assert len(os.listdir(os.path.join(checkpoint_path(out_dir), "_inputs"))) == 3
     assert read_checkpoint(spark, out_dir).count() == 30
     assert spark.read.parquet(checkpoint_path(out_dir)).count() == 30
 
@@ -384,9 +386,11 @@ def test_reused_run_id_whose_dir_is_gone_commits_only_new_docs(spark, tmp_path):
 
 def test_fresh_commit_job_budget(spark, tmp_path):
     """One fresh commit of 40 new docs beside three committed runs: the
-    run-id guard is a marker stat and the lineage append probes nothing,
-    so the job launches 7 Spark jobs (9 with a lineage scan for the guard
-    and an already-committed probe before the append)."""
+    run-id guard is a marker stat, the lineage append probes nothing and
+    the input and run-dir reads carry their schemas, so the job launches 5
+    Spark jobs (7 with a schema-inference job for each of those two reads,
+    9 more with a lineage scan for the guard and an already-committed
+    probe before the append)."""
     _, out_dir = _commit_runs(spark, tmp_path, 3)
     new = _write_shard(spark, tmp_path, "new40", 30, 70, 70)
 
@@ -398,4 +402,136 @@ def test_fresh_commit_job_budget(spark, tmp_path):
 
     jobs = _jobs_under_group(spark, "fresh-commit", run)
     assert stats["docs"] == 40
-    assert len(jobs) == 7
+    assert len(jobs) == 5
+
+
+def _input_keys(out_dir):
+    from pdf_extractor_spark.checkpoint import checkpoint_path
+
+    try:
+        return set(os.listdir(os.path.join(checkpoint_path(out_dir), "_inputs")))
+    except FileNotFoundError:
+        return set()
+
+
+def _retry(spark, docs_path, out_dir, run_id, **kw):
+    """One job over ``docs_path``; returns (stats, Spark job ids)."""
+    stats = {}
+
+    def run():
+        stats.update(run_extraction_job(spark, docs_path, out_dir,
+                                        run_id=run_id, partitions=2, **kw))
+
+    return stats, _jobs_under_group(spark, f"retry-{run_id}", run)
+
+
+def test_input_key_makes_retry_job_free(spark, tmp_path):
+    """A retry over an input that is already committed finds its key and
+    returns without a Spark job or a lineage read."""
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 30, 30)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    keys = _input_keys(out_dir)
+    assert len(keys) == 1
+    assert all(
+        os.path.getsize(os.path.join(out_dir, "checkpoint", "_inputs", k)) == 0
+        for k in keys
+    )
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r2")
+    assert stats["docs"] == 0
+    assert jobs == []
+    assert not os.path.isdir(os.path.join(out_dir, "spans", "run_id=r2"))
+    assert _input_keys(out_dir) == keys
+
+
+def test_input_key_added_file_commits_only_new_docs(spark, tmp_path):
+    """A file added to a committed input changes its key: the retry
+    anti-joins, commits only the new file's docs, and keys the grown
+    input, so the next retry is job-free again."""
+    import shutil
+
+    from pdf_extractor_spark.checkpoint import read_checkpoint
+
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 20, 40)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+
+    extra = _write_shard(spark, tmp_path, "extra", 20, 40, 40)
+    for f in os.listdir(extra):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(extra, f), os.path.join(docs_path, "x-" + f))
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r2")
+    assert stats["docs"] == 20
+    assert jobs != []
+    spans = spark.read.parquet(os.path.join(out_dir, "spans", "run_id=r2"))
+    assert {r["doc_id"] for r in spans.select("doc_id").collect()} == {
+        f"doc_{i:09d}" for i in range(20, 40)
+    }
+    assert read_checkpoint(spark, out_dir).count() == 40
+    assert len(_input_keys(out_dir)) == 2
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r3")
+    assert stats["docs"] == 0
+    assert jobs == []
+
+
+def test_input_key_rewritten_file_takes_antijoin_path(spark, tmp_path):
+    """An input file rewritten with the same doc_ids has a new mtime, so
+    the key misses: the retry anti-joins, finds every doc committed,
+    commits nothing and records the new key."""
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 30, 30)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    keys = _input_keys(out_dir)
+
+    part = sorted(f for f in os.listdir(docs_path) if f.endswith(".parquet"))[0]
+    path = os.path.join(docs_path, part)
+    data = open(path, "rb").read()
+    st = os.stat(path)
+    with open(path, "wb") as fh:
+        fh.write(data)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r2")
+    assert stats["docs"] == 0
+    assert jobs != []
+    assert not os.path.isdir(os.path.join(out_dir, "spans", "run_id=r2"))
+    assert len(_input_keys(out_dir)) == 2 and keys < _input_keys(out_dir)
+
+
+def test_missing_input_key_written_on_first_noop_retry(spark, tmp_path):
+    """An output without keys (written before keys existed, or a crash
+    between the commit marker and the key): the first retry takes the
+    anti-join path and writes the key, the second launches no job."""
+    import shutil
+
+    from pdf_extractor_spark.checkpoint import checkpoint_path
+
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 30, 30)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    shutil.rmtree(os.path.join(checkpoint_path(out_dir), "_inputs"))
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r2")
+    assert stats["docs"] == 0
+    assert jobs != []
+    assert len(_input_keys(out_dir)) == 1
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r3")
+    assert stats["docs"] == 0
+    assert jobs == []
+
+
+def test_resume_false_ignores_input_key(spark, tmp_path):
+    """``resume=False`` neither reads nor skips on a key: a committed input
+    run again under a fresh id is extracted again."""
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 20, 20)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    assert len(_input_keys(out_dir)) == 1
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r2", resume=False)
+    assert stats["docs"] == 20
+    assert jobs != []

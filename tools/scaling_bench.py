@@ -34,7 +34,7 @@ total cores):
   CLUSTER_REPEATS=R cluster_scaling.py
       -> --job extract --shape executors --legs 4,8,16,32
          --cores-per-executor 4 --n-docs N --repeats R
-         (R submits of one timed job each, was one submit of R jobs)
+         (R submits, each the best of SUBMIT_REPEATS timed jobs)
   CLUSTER_EXEC_MEM_MB -> the EXEC_MEM_MB constant below
   SPARK_GRAFT_CURATION_LEGS=8,32 SPARK_GRAFT_CURATION_DOCS=N
   curation_scaling.py [--cluster] [--dup-mod D] [--unhinted]
@@ -67,6 +67,10 @@ CLUSTER_RUNS_PATH = os.path.join(REPO, "BENCH", "cluster_runs.jsonl")
 CURATION_RUNS_PATH = os.path.join(REPO, "BENCH", "curation_runs.jsonl")
 # local-cluster worker memory per executor, in MB
 EXEC_MEM_MB = 6144
+# timed extraction jobs per executor-shape submit; the row keeps the best,
+# so it times a warm job as the thread shape's best-of-4 does (rows before
+# this setting are one cold job each)
+SUBMIT_REPEATS = 3
 DEFAULT_N_DOCS = {"extract": 2_000_000, "curation": 100_000}
 
 _H32 = "cast(conv(substring(md5({0}), 1, 8), 16, 10) as bigint)"
@@ -239,7 +243,7 @@ def submit_cmd(args, cores: int, path: str, zip_path: str, out: str) -> list:
     if args.job == "extract":
         return cmd + [os.path.join(REPO, "tools", "run_job.py"), path, out,
                       "--partitions", str(cores * 2), "--no-resume",
-                      "--bench-repeats", "1"]
+                      "--bench-repeats", str(SUBMIT_REPEATS)]
     return cmd + curation_leg_args(args, cores)
 
 
