@@ -206,10 +206,8 @@ def main() -> None:
         # one shuffle partition per core: cpus*2 was measured to cost 2-3x
         # on the small-shuffle headline queries (two task waves + per-task
         # overhead dominate when partitions are KB-sized). The extract job
-        # is unaffected: its narrow path has no shuffle (parallelism =
-        # scan splits) and its wide path takes an explicit width via the
-        # `partitions` arg (content-hash repartition reused by the dedup
-        # groupBy).
+        # is unaffected: its plan has no shuffle (parallelism = scan
+        # splits).
         shuffle_partitions=args.cpus,
         app_name="bench",
     )

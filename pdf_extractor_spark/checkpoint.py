@@ -80,12 +80,26 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.schema import CHECKPOINT_SCHEMA, RUN_LINEAGE_SCHEMA
+from pdf_extractor_spark.schema import (
+    CHECKPOINT_SCHEMA, METRICS_SCHEMA, RUN_LINEAGE_SCHEMA,
+)
 
 CHECKPOINT_DIR = "checkpoint"
 SPANS_DIR = "spans"
 COMMITTED_DIR = "_committed"
 INPUTS_DIR = "_inputs"
+_URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+
+def _require_local(output_dir: str) -> None:
+    """Refuse a URI ``output_dir``: the protocol is local-filesystem code
+    (os.path, glob, rename), which would read ``file:///x`` as a path
+    relative to the cwd while Spark writes the spans at the URI."""
+    if _URI_RE.match(output_dir):
+        raise ValueError(
+            f"output_dir {output_dir!r} is a URI; the checkpoint protocol "
+            "needs a local path"
+        )
 
 
 def checkpoint_path(output_dir: str) -> str:
@@ -272,6 +286,7 @@ def reconcile_checkpoint(
     reconciles everything ONCE at start, then only its current batch-run
     inside each trigger — sweeping every run dir per micro-batch is
     O(batches²) Spark jobs over the stream's lifetime."""
+    _require_local(output_dir)
     adopted: List[str] = []
     runs = _runs_on_disk(output_dir, table)
     if run_ids is not None:
@@ -335,9 +350,11 @@ def pending(
     With ``resume``: reconcile (every run of ``table``, or only ``run_ids``);
     if the input ``key`` (:func:`input_key` of ``docs``) is recorded, stop
     there, before any Spark job; else anti-join the committed docs, and
-    record ``key`` when none is left. Always: refuse a marked ``run_id`` —
-    overwriting its directory with new docs would silently lose docs that
-    lineage still marks committed."""
+    record ``key`` when none is left. Always: refuse a URI ``output_dir``
+    before anything is written, and a marked ``run_id`` — overwriting its
+    directory with new docs would silently lose docs that lineage still
+    marks committed."""
+    _require_local(output_dir)
     if resume:
         reconcile_checkpoint(spark, output_dir, table, run_ids=run_ids)
         if key is not None and os.path.exists(input_key_path(output_dir, key)):
@@ -396,36 +413,27 @@ def commit(
     n_docs = write_checkpoint(spark, output_dir, run_id, table)
     _mark_input(output_dir, key)
     stats = run_stats(run_id, n_docs, t0, metrics)
-    _write_metrics(spark, output_dir, run_id, metrics)
+    _write_metrics(output_dir, run_id, metrics)
     return stats
 
 
-def _write_metrics(
-    spark: SparkSession, output_dir: str, run_id: str, metrics: dict
-) -> None:
+def _write_metrics(output_dir: str, run_id: str, metrics: dict) -> None:
     """Append one run's metrics rows (METRICS_SCHEMA layout) to
     ``{output_dir}/metrics`` as one parquet file the driver writes itself:
     the O(1) scalars already live on the driver, and a Spark job would add
     ~0.4 s of scheduling per run. Write-to-temp + rename keeps a crash from
-    leaving a torn file. A non-local scheme (os.makedirs on 's3a://bucket'
-    would create a literal local dir) goes through Spark's writer instead."""
-    rows = [(run_id, k, float(v if v is not None else 0)) for k, v in metrics.items()]
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", output_dir)
-    if m and m.group(1) != "file":
-        spark.createDataFrame(
-            rows, "run_id string, metric string, value double"
-        ).coalesce(1).write.mode("append").parquet(
-            os.path.join(output_dir, "metrics")
-        )
-        return
+    leaving a torn file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    table = pa.table(
-        {
-            "run_id": pa.array([r[0] for r in rows], pa.string()),
-            "metric": pa.array([r[1] for r in rows], pa.string()),
-            "value": pa.array([r[2] for r in rows], pa.float64()),
-        }
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(METRICS_SCHEMA)
+    table = pa.Table.from_pylist(
+        [
+            dict(zip(schema.names, (run_id, k, float(v if v is not None else 0))))
+            for k, v in metrics.items()
+        ],
+        schema=schema,
     )
     metrics_dir = os.path.join(output_dir, "metrics")
     os.makedirs(metrics_dir, exist_ok=True)

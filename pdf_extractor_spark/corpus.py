@@ -9,11 +9,11 @@ Produces a RAW_DOC_SCHEMA parquet table of interleaved text+media documents
     /root/reference/meus_pdfs and FIXTURES.md §3);
   * ~45% HTML pages with boilerplate nav/footer chrome around content
     paragraphs and ``<img>`` media (north_rule HTML branch);
-  * exact duplicates at ``dup_frac`` (exercises the dedup-before-compute
-    path, reference pdf_cache extractor.py:883-886);
+  * exact duplicates at ``dup_frac`` (the reference's pdf_cache computes
+    them once, extractor.py:883-886; the extraction plan re-tokenizes them);
   * a skew tail: ``skew_frac`` of docs are 20-60× larger than the median
-    (north_rule megabyte-PDF skew clause) so the content-hash-salted
-    repartition in pipeline.py (skew_repartition) is measured, not assumed.
+    (north_rule megabyte-PDF skew clause), so the cost of fat documents in
+    the one zero-shuffle plan is measured, not assumed.
 
 Everything is seeded per-doc (doc index → rng), so any subset of the corpus
 is reproducible on any partitioning — generation runs distributed via

@@ -8,18 +8,16 @@ Stages (all DataFrame-declarative; Catalyst owns pushdown/pruning/joins):
     → [field extraction vs broadcast KB]
     → write spans + lineage columns (ST3/S8) → commit lineage + marker
 
-Plans (``extract_spans(dedup=...)``):
-  * ``"narrow"`` (default): the kernel runs straight off the scan — no
-    shuffle at all. Duplicates are re-tokenized; scan splits
-    (``spark.sql.files.maxPartitionBytes``) are the only sizing, so there
-    is no size bucketing of fat documents.
-  * ``"wide"``: dedup-before-compute (O3; the reference computes each
-    distinct document once via its hash caches, extractor.py:72-81,883-886)
-    — one exchange on sha2(content) that both spreads megabyte documents
-    uniformly (``skew_repartition``) and groups duplicates
-    (``dedup_with_lineage``); everything downstream is narrow.
-  * Resume: a left-anti join against the checkpoint table keyed on doc_id —
-    at scale this is a broadcast-able or bucketed join on the checkpoint side.
+One plan: the kernel runs straight off the scan, with no shuffle at all.
+Duplicates are re-tokenized, and scan splits
+(``spark.sql.files.maxPartitionBytes``) are the only sizing, so no plan
+buckets fat documents or handles skew. A dedup-before-compute plan (one
+exchange on sha2(content), tokenizing each distinct document once, as the
+reference's hash caches do, extractor.py:72-81,883-886) lost to it on the
+``extract_mixed`` shape (10k docs, 10% duplicates, local[4], 1 GiB heap):
+this plan won 4 of 5 alternating pairs, medians 2289 vs 2142 docs/s, with
+identical spans.
+Resume is a left-anti join against the checkpoint table keyed on doc_id.
 """
 
 from __future__ import annotations
@@ -32,7 +30,6 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.schema import METRICS_SCHEMA  # noqa: F401 (public)
 from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
 
 SESSION_DEFAULTS = {
@@ -105,36 +102,11 @@ def build_session(
 def with_content_hash(df: DataFrame, content_col: str = "content") -> DataFrame:
     """S2: streaming SHA-256 of the document bytes (extractor.py:72-81).
 
-    NULL content hashes to the empty-bytes digest so such rows survive the
-    dedup join (they get an empty span list instead of silently vanishing)."""
+    NULL content hashes to the empty-bytes digest, so such rows keep a
+    content_hash (and get an empty span list) instead of a NULL key."""
     return df.withColumn(
         "content_hash",
         F.sha2(F.coalesce(F.col(content_col), F.lit(b"")), 256),
-    )
-
-
-def skew_repartition(df: DataFrame, partitions: int) -> DataFrame:
-    """Content-hash-salted repartition: sha2(content) is uniform, so
-    megabyte-scale PDFs spread evenly instead of queueing behind each other
-    (north_rule skew clause). Measured against a (size_bucket, salt) pair
-    scheme: hashing the pair into partitions leaves bins empty/overloaded
-    (7.7s vs 4.3s on the 20k-doc corpus), so the plain uniform key wins.
-    Deterministic — no clock or rand involved."""
-    return df.repartition(partitions, F.col("content_hash"))
-
-
-def dedup_with_lineage(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Dedup that keeps every duplicate's doc_id alongside the one
-    representative content — one shuffle total.
-
-    ``dropDuplicates`` + join-back would shuffle the content AND then
-    shuffle the (much larger) span results a second time; aggregating
-    ``collect_list(doc_id)`` in the same exchange and exploding after the
-    tokenizer halves the data movement. Map-side partial aggregation
-    collapses same-partition duplicates before the wire."""
-    return df.groupBy("content_hash").agg(
-        F.first(content_col).alias(content_col),
-        F.collect_list("doc_id").alias("doc_ids"),
     )
 
 
@@ -196,55 +168,25 @@ def tokenize_stage(
 
 
 def extract_spans(
-    docs: DataFrame,
-    partitions: int = 32,
-    dedup: str = "narrow",
-    columns: str = "geo",
+    docs: DataFrame, partitions: int = 32, columns: str = "geo"
 ) -> DataFrame:
-    """RAW_DOC_SCHEMA docs → (doc_id, spans, full_text, …) with dedup.
+    """RAW_DOC_SCHEMA docs → (doc_id, content_hash, spans, …).
 
     ``docs`` is the work left to do: the batch and stream jobs anti-join
     committed doc_ids out of the checkpoint (batch_extract.py:99-107
     semantics) once, for their nothing-to-do check, and pass that frame.
 
-    ``dedup`` is a cost-model switch (the reference's pdf_cache always
-    memoizes, extractor.py:883-886; at cluster scale the right answer
-    depends on kernel cost vs wire cost):
-
-    * ``"narrow"`` (default): tokenize straight off the scan — ZERO
-      shuffles. Duplicates are re-tokenized (~dup_rate extra CPU). Wins
-      whenever per-doc kernel cost is cheap relative to shuffling the
-      content bytes (measured here: ~1 ms/doc kernel vs ~15 ms/doc to move
-      a 15 KB doc through two shuffle hops).
-    * ``"wide"``: dedup-before-compute — one groupBy(content_hash) exchange
-      carrying content + collect_list(doc_id), tokenize once per distinct
-      doc, explode the id list after. Wins when the kernel is expensive
-      (OCR, media decode, LLM stages) or the dup rate is high; this is the
-      100 TB default for those stages.
+    The kernel runs straight off the scan with no exchange, so duplicates
+    are re-tokenized (~dup_rate extra CPU) instead of being grouped by
+    content hash first (the reference memoizes them, extractor.py:883-886);
+    see the module docstring for the A/B that kept this plan.
+    ``partitions`` sizes nothing; it is accepted so existing callers keep
+    working.
     """
-    if dedup not in ("narrow", "wide"):
-        raise ValueError(f"dedup={dedup!r}; expected 'narrow' or 'wide'")
-    df = with_content_hash(docs)
-    extra = (
-        [] if columns == "public" else ["ordered_spans", "full_text"]
+    extra = [] if columns == "public" else ["ordered_spans", "full_text"]
+    return tokenize_stage(with_content_hash(docs), columns=columns).select(
+        "doc_id", "content_hash", "page_width", "page_height", "spans", *extra,
     )
-    if dedup == "narrow":
-        return tokenize_stage(df, columns=columns).select(
-            "doc_id", "content_hash", "page_width", "page_height",
-            "spans", *extra,
-        )
-    # ONE exchange total, at the caller-chosen width: the explicit
-    # repartition on content_hash sets the task count for the tokenize
-    # stage (uniform hash key spreads megabyte skew docs), and the groupBy
-    # on the SAME key reuses that partitioning — Catalyst inserts no second
-    # exchange (ClusteredDistribution satisfied). A repartition AFTER the
-    # groupBy would be the redundant-shuffle version of this.
-    distinct = dedup_with_lineage(skew_repartition(df, partitions))
-    tokenized = tokenize_stage(distinct, columns=columns).select(
-        "content_hash", "doc_ids", "page_width", "page_height",
-        "spans", *extra,
-    )
-    return tokenized.withColumn("doc_id", F.explode("doc_ids")).drop("doc_ids")
 
 
 # ---------------------------------------------------------------------------
@@ -347,7 +289,6 @@ def run_extraction_job(
     run_id: Optional[str] = None,
     partitions: int = 32,
     resume: bool = True,
-    dedup: str = "narrow",
 ) -> dict:
     """Read a RAW_DOC parquet table, extract spans, write spans + checkpoint.
 
@@ -364,6 +305,8 @@ def run_extraction_job(
     before any Spark job (checkpoint.py, "Input keys").
     New docs under a committed ``run_id`` raise, with or without ``resume``
     (``resume=False`` skips crash healing; see checkpoint.py).
+    ``partitions`` sizes nothing; it is accepted so existing callers keep
+    working.
     """
     from pdf_extractor_spark import checkpoint
 
@@ -378,9 +321,7 @@ def run_extraction_job(
         return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
     # spans-only job → push the public projection into the kernel (geometry
     # and full_text never cross Arrow; full_text is derivable from spans).
-    result = extract_spans(
-        docs, partitions=partitions, dedup=dedup, columns="public"
-    )
+    result = extract_spans(docs, partitions=partitions, columns="public")
     return checkpoint.commit(
         spark, lineage_projection(result), output_dir, run_id, span_metrics(),
         t0, key=key,

@@ -441,7 +441,7 @@ _PROP_ROUND_LIMIT = 10
 # 2 jobs/round) costs more wall time than one collect + linear union-find.
 # Above it, the distributed propagation/star path runs unchanged — the
 # guard makes the small case cheap without capping the big one.
-_CC_DRIVER_EDGE_LIMIT = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "1000000"))
+_CC_DRIVER_EDGE_LIMIT = 1_000_000
 
 
 def _cc_driver(spark, edge_rows):
@@ -2475,19 +2475,6 @@ def _mix_hash_col():
 
 _PACK_BUDGET = 512  # tokens per training chunk
 _PACK_SHARDS = 8    # pack within (source, shard); raise with corpus size
-# pack_write's one text-bearing exchange carries the pre-split token array
-# (default — measured wall-clock winner on a single box) or the raw string
-# (SPARK_GRAFT_PACK_SHUFFLE=raw — 2.3x fewer shuffle bytes at the cost of
-# tokenizing twice; the right setting when shuffle bytes traverse a real
-# cluster NIC/disk). A/B tables in BENCH/NOTES.md "pack_write shuffle
-# payload (round 5)". The variable is read at each call; this constant is
-# the payload used while it is unset.
-_PACK_SHUFFLE_RAW = False
-
-
-def _pack_shuffle_raw() -> bool:
-    mode = os.environ.get("SPARK_GRAFT_PACK_SHUFFLE")
-    return _PACK_SHUFFLE_RAW if mode is None else mode == "raw"
 
 
 @register(
@@ -2610,43 +2597,24 @@ def corpus_pack_write(spark, sf_dir):
     second shuffle: its keys (source, shard, chunk_id) are a superset of
     the window's partitioning, so every chunk group is already co-located
     (EXPLAIN.md: Window → Generate → ObjectHashAggregate with a single
-    Exchange). The exchange PAYLOAD is switchable (_pack_shuffle_raw):
-    token array (default, single-box wall winner) vs raw string (2.3x
-    fewer shuffle bytes — set SPARK_GRAFT_PACK_SHUFFLE=raw when the
-    shuffle crosses a real cluster's NIC/disk). The boundary cut (lo/hi + slice) is narrow, the chunk
-    fan-out per doc is ≤ n_tok/{B} + 1 rows, and chunk groups are ≤ {B}
-    tokens by construction, so the reassembly agg has uniform, bounded
+    Exchange). The exchange carries the pre-split token array, so each doc
+    is tokenized once; shuffling the raw string instead moved 2.3x fewer
+    bytes but tokenized twice, and read 23–24% slower on two legs of the
+    single-box A/B and within noise on the third (BENCH/NOTES.md
+    "pack_write shuffle payload"). The boundary cut (lo/hi + slice) is
+    narrow, the chunk fan-out per doc is ≤ n_tok/{B} + 1 rows, and chunk
+    groups are ≤ {B} tokens by construction, so the reassembly agg has uniform, bounded
     buffers — no key skew is possible. Sharding bounds each window
     partition exactly as in the planner; chunks with no tokens (all-empty
     docs) never emit."""
     d = t(spark, sf_dir, "documents")
     tok_expr = "filter(split(lower(coalesce(text, '')), ' '), w -> w != '')"
-    raw = _pack_shuffle_raw()
-    if raw:
-        # shuffle the RAW text string, not the token array: a Tungsten
-        # array<string> row costs ~8 B of offset/size per element on top
-        # of the bytes, vs ~1 B/token of separators in the raw string —
-        # the one text-bearing exchange shrinks 2.3x (measured 339 vs
-        # 777 MB at 400k docs). n_tok is counted in-row BEFORE the
-        # exchange (the window sums it); the array is re-materialized
-        # AFTER, where the slicing needs it. Tokenize runs twice per doc,
-        # and on a single box (shuffle = page cache) that CPU loses to
-        # the byte saving by ~20% wall — hence NOT the default; it wins
-        # where shuffle bytes traverse a cluster NIC/disk. Full A/B:
-        # BENCH/NOTES.md "pack_write shuffle payload (round 5)".
-        toks = d.select(
-            "doc_id",
-            "source",
-            (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
-            F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        ).withColumn("n_tok", F.size(F.expr(tok_expr)).cast("bigint"))
-    else:
-        toks = d.select(
-            "doc_id",
-            "source",
-            (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
-            F.expr(tok_expr).alias("l"),
-        ).withColumn("n_tok", F.size("l").cast("bigint"))
+    toks = d.select(
+        "doc_id",
+        "source",
+        (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
+        F.expr(tok_expr).alias("l"),
+    ).withColumn("n_tok", F.size("l").cast("bigint"))
     w = (
         Window.partitionBy("source", "shard")
         .orderBy("doc_id")
@@ -2655,8 +2623,6 @@ def corpus_pack_write(spark, sf_dir):
     c = toks.withColumn(
         "cum_before", F.coalesce(F.sum("n_tok").over(w), F.lit(0)).cast("bigint")
     )
-    if raw:
-        c = c.withColumn("l", F.expr(tok_expr)).drop("text")
     B = _PACK_BUDGET
     pieces = c.select(
         "source", "shard", "doc_id", "l", "n_tok", "cum_before",

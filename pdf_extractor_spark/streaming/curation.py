@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     BooleanType, LongType, StringType, StructField, StructType,
 )
 
+from pdf_extractor_spark.streaming.stateful import DEDUP_STATE_SCHEMA
+
 DOCUMENTS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
@@ -61,8 +63,6 @@ CURATION_OUT_SCHEMA = StructType(
         StructField("final_keep", BooleanType()),
     ]
 )
-
-_SEEN_STATE_SCHEMA = StructType([StructField("seen", BooleanType())])
 
 _OUT_COLS = [f.name for f in CURATION_OUT_SCHEMA.fields]
 
@@ -153,7 +153,7 @@ def curation_stream(
     return gated.groupBy("content_hash").applyInPandasWithState(
         _first_seen_fn,
         outputStructType=CURATION_OUT_SCHEMA,
-        stateStructType=_SEEN_STATE_SCHEMA,
+        stateStructType=DEDUP_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -121,36 +121,27 @@ def test_spark_path_equals_local_kernel(spark, columns):
             ], doc_id
 
 
-def test_wide_dedup_path_equals_narrow(spark):
-    """The dedup cost-model switch must be semantics-free: the wide path
-    (groupBy(content_hash) -> tokenize once per distinct -> explode the
-    doc_id list back) yields exactly the narrow path's spans for every
-    doc_id on a duplicate-heavy corpus."""
-    from pdf_extractor_spark.pipeline import extract_spans
+@pytest.mark.parametrize("columns", ["public", "geo"])
+def test_extract_plan_has_no_exchange(spark, tmp_path, columns):
+    """The extraction plan is scan -> kernel -> sink: the executed plan of
+    the spans sink columns holds no Exchange and exactly one Arrow UDF
+    evaluation, for both projections of the kernel."""
+    from pdf_extractor_spark.pipeline import extract_spans, lineage_projection
+    from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
 
-    docs = generate_corpus(spark, 60, partitions=4, dup_frac=0.3)
-
-    def spans_of(dedup):
-        return {
-            r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                          for s in r["spans"]]
-            for r in extract_spans(docs, partitions=4, columns="public",
-                                   dedup=dedup)
-            .select("doc_id", "spans").collect()
-        }
-
-    narrow = spans_of("narrow")
-    wide = spans_of("wide")
-    assert wide == narrow
-    assert len(wide) == 60
+    path = str(tmp_path / "docs")
+    generate_corpus(spark, 20, partitions=2).write.parquet(path)
+    docs = spark.read.schema(RAW_DOC_SCHEMA).parquet(path)
+    out = lineage_projection(extract_spans(docs, columns=columns))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_unknown_plan_values_rejected():
-    """A typo in a plan switch raises instead of silently picking the
-    other plan (checked before any DataFrame is touched)."""
-    from pdf_extractor_spark.pipeline import extract_spans, tokenize_stage
+    """A typo in the projection switch raises instead of silently picking
+    the other projection (checked before any DataFrame is touched)."""
+    from pdf_extractor_spark.pipeline import tokenize_stage
 
-    with pytest.raises(ValueError, match="dedup='wdie'"):
-        extract_spans(None, dedup="wdie")
     with pytest.raises(ValueError, match="columns='publc'"):
         tokenize_stage(None, columns="publc")

@@ -573,45 +573,3 @@ def test_reset_side_memo_forces_rebuild(spark, tmp_path):
     assert any(k[-1] == "lsh_pairs" for k in pq._SIDE_MEMO)
     pq.reset_side_memo()
     assert not pq._SIDE_MEMO
-
-
-def test_pack_write_payload_modes_identical(spark, sf_dir, monkeypatch):
-    """The shuffle-payload switch (r5 byte-budget A/B): the raw-string
-    exchange form must produce bit-identical chunks to the default
-    token-array form — only the bytes crossing the exchange differ."""
-    import pdf_extractor_spark.pipeline_queries as pq
-
-    def run():
-        return {
-            (r["source"], r["shard"], r["chunk_id"]): (r["n_tok"], r["chunk_text"])
-            for r in pq.corpus_pack_write(spark, sf_dir).collect()
-        }
-
-    monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", False)
-    array_form = run()
-    monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", True)
-    raw_form = run()
-    assert array_form == raw_form and array_form
-
-
-def test_pack_shuffle_env_read_at_call_time(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_PACK_SHUFFLE set after the module is imported still
-    switches corpus_pack_write to the raw-string exchange payload."""
-    import re
-
-    import pdf_extractor_spark.pipeline_queries as pq
-
-    def plan():
-        qe = pq.corpus_pack_write(spark, sf_dir)._jdf.queryExecution()
-        return re.sub(r"#\d+|\bx_\d+", "", qe.optimizedPlan().toString())
-
-    monkeypatch.delenv("SPARK_GRAFT_PACK_SHUFFLE", raising=False)
-    array_plan = plan()
-    monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", True)
-    raw_plan = plan()
-    assert raw_plan != array_plan
-    monkeypatch.setattr(pq, "_PACK_SHUFFLE_RAW", False)
-    monkeypatch.setenv("SPARK_GRAFT_PACK_SHUFFLE", "raw")
-    assert plan() == raw_plan
-    monkeypatch.setenv("SPARK_GRAFT_PACK_SHUFFLE", "array")
-    assert plan() == array_plan

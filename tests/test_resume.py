@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.corpus import generate_corpus
@@ -535,3 +536,24 @@ def test_resume_false_ignores_input_key(spark, tmp_path):
     stats, jobs = _retry(spark, docs_path, out_dir, "r2", resume=False)
     assert stats["docs"] == 20
     assert jobs != []
+
+
+@pytest.mark.parametrize("uri", ["file://{tmp}/out", "s3a://bucket/out"])
+def test_uri_output_dir_rejected_before_any_write(spark, tmp_path, monkeypatch, uri):
+    """The commit protocol is local-filesystem code: a URI ``output_dir``
+    raises before the spans write, and no lineage path lands under the
+    cwd (os.path would read ``file:///x`` as the relative path ``file:/x``).
+    The stream refuses it before its source checkpoint is written."""
+    from pdf_extractor_spark.streaming.job import run_stream_extraction
+
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 10, 10)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = uri.format(tmp=tmp_path)
+    with pytest.raises(ValueError, match="is a URI"):
+        run_extraction_job(spark, docs_path, out, run_id="r1", partitions=2)
+    with pytest.raises(ValueError, match="is a URI"):
+        run_stream_extraction(spark, docs_path, out)
+    assert not (tmp_path / "out").exists()
+    assert os.listdir(cwd) == []

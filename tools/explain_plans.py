@@ -3,7 +3,7 @@
 EXPLAIN.md — the review artifact for plan-level properties: broadcast joins
 where dims are small, PushedFilters/ReadSchema on parquet scans, partial
 aggregation before exchanges, WholeStageCodegen spans, and the absence of
-shuffles on the narrow extraction path."""
+shuffles on the extraction path."""
 
 from __future__ import annotations
 
@@ -134,12 +134,8 @@ def main() -> None:
     generate_corpus(spark, 200, partitions=4).write.parquet(corpus_dir)
     docs = spark.read.parquet(corpus_dir)
     sections.append(
-        ("extract_spans (narrow: zero-shuffle)",
-         fmt(extract_spans(docs, partitions=8, columns="public"))),
-    )
-    sections.append(
-        ("extract_spans (wide: dedup-before-compute, one exchange)",
-         fmt(extract_spans(docs, partitions=8, dedup="wide"))),
+        ("extract_spans (zero-shuffle)",
+         fmt(extract_spans(docs, columns="public"))),
     )
 
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
@@ -148,7 +144,7 @@ def main() -> None:
             "What to look for: BroadcastHashJoin on dim joins (j1, sim_topk);\n"
             "PushedFilters/ReadSchema pruning on every parquet scan; partial\n"
             "HashAggregate before each Exchange; WholeStageCodegen around the\n"
-            "relational spans; ZERO Exchange nodes in the narrow extraction\n"
+            "relational spans; ZERO Exchange nodes in the extraction\n"
             "plan (the whole job is scan -> kernel -> sink).\n"
         )
         for name, plan in sections:

@@ -19,11 +19,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("input", help="RAW_DOC parquet path")
     ap.add_argument("output", help="output dir (spans|results + checkpoint/)")
-    ap.add_argument("--partitions", type=int, default=64,
-                    help="spans job: width of the --dedup wide exchange")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--dedup", choices=["narrow", "wide"], default="narrow")
     ap.add_argument(
         "--mode", choices=["spans", "fields"], default="spans",
         help="spans = tokenize-only job; fields = the full planner+repair "
@@ -57,10 +54,7 @@ def main() -> None:
         for i in range(args.bench_repeats):
             out = f"{args.output.rstrip('/')}/rep{i}"
             t0 = time.time()
-            stats = run_extraction_job(
-                spark, args.input, out,
-                partitions=args.partitions, resume=False,
-            )
+            stats = run_extraction_job(spark, args.input, out, resume=False)
             legs.append(round(time.time() - t0, 3))
             docs = stats["docs"]
             shutil.rmtree(out, ignore_errors=True)
@@ -93,9 +87,7 @@ def main() -> None:
             args.input,
             args.output,
             run_id=args.run_id,
-            partitions=args.partitions,
             resume=not args.no_resume,
-            dedup=args.dedup,
         )
     print(json.dumps(stats))
     spark.stop()

@@ -242,7 +242,7 @@ def submit_cmd(args, cores: int, path: str, zip_path: str, out: str) -> list:
         cmd += ["--conf", f"{k}={v}"]
     if args.job == "extract":
         return cmd + [os.path.join(REPO, "tools", "run_job.py"), path, out,
-                      "--partitions", str(cores * 2), "--no-resume",
+                      "--no-resume",
                       "--bench-repeats", str(SUBMIT_REPEATS)]
     return cmd + curation_leg_args(args, cores)
 
