@@ -19,11 +19,16 @@ commit — made safe):
 * crash BETWEEN spans commit and lineage commit → the run directory is
   complete but unreferenced; :func:`reconcile_checkpoint` adopts it by
   deriving its lineage rows from the committed files — the docs are NOT
-  re-extracted and the spans table holds no duplicates;
-* crash DURING the lineage commit (a multi-file parquet append is not
-  atomic: some task files land, others do not) → the run has SOME
-  committed rows; :func:`reconcile_checkpoint`, the one place that probes
-  a run's existing lineage, appends exactly the missing rows;
+  re-extracted and the spans table holds no duplicates. An empty write
+  that crashed before :func:`commit` removed it is adopted the same way,
+  with 0 rows;
+* crash DURING the lineage commit → nothing is lost: the driver writes a
+  run's lineage as ONE parquet file under a hidden temp name (which Spark's
+  listing skips) and renames it into place, so lineage holds all of the
+  run's rows or none. Outputs written when lineage was a multi-file Spark
+  append can still hold a torn run (some rows committed, others not);
+  :func:`reconcile_checkpoint`, the one place that probes a run's existing
+  lineage, appends exactly the missing rows;
 * crash AFTER the lineage commit but BEFORE the commit marker (below) →
   the run is unmarked, so the next reconcile recounts it once, finds its
   lineage complete and writes the marker — one recount, never a skipped
@@ -49,15 +54,24 @@ without a Spark job, as the reference skips requests already in its output
 (batch_extract.py:99-107). The key of an input (:func:`input_key`) is a
 sha256 over its file listing, one ``path\tsize\tmtime_ns`` line per file.
 :func:`commit` writes a zero-byte ``checkpoint/_inputs/<key>`` file once
-the run's lineage and marker are durable, and :func:`pending` writes it
-when the resume anti-join finds nothing left, so outputs older than keys,
-and runs that reconcile adopted, get their key on the first no-op retry.
+the run's lineage and marker are durable, or once its write turned out
+empty (the resume anti-join left nothing); :func:`pending` writes it when
+a marked id's retry finds nothing left. So outputs older than keys, and
+runs that reconcile adopted, get their key on the first no-op retry.
 A resume that finds the key stops after reconcile and reads no lineage.
 Keys live under the lineage directory, as the markers do: anything that
 removes lineage removes the keys with it. This is sound because lineage
 only grows. It assumes inputs are immutable: a file rewritten in place
 with the same size and mtime is not detected, which is the assumption
 Spark's file source makes too.
+
+Fresh ids are not probed: :func:`pending` hands a run id without a marker
+the anti-joined frame as it is, and :func:`commit` learns from its write's
+observed ``docs`` count whether anything was left. A fresh commit is the
+run directory write and nothing else; its lineage rows are the columns of
+that directory's own files, read and written by the driver (about 1M
+rows/s; memory bounded by one run file and one row group), with no
+Spark job.
 
 Per-commit cost is O(this run's output) — the previous protocol re-scanned
 the entire spans table (all runs ever written) on every commit, which is
@@ -88,6 +102,9 @@ CHECKPOINT_DIR = "checkpoint"
 SPANS_DIR = "spans"
 COMMITTED_DIR = "_committed"
 INPUTS_DIR = "_inputs"
+# rows per driver-written lineage row group (~4.5 MB of parquet at ~35 B a
+# row): bounds the driver's lineage buffer
+ROW_GROUP_ROWS = 1 << 17
 _URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
@@ -162,16 +179,26 @@ def input_key_path(output_dir: str, key: str) -> str:
     return os.path.join(checkpoint_path(output_dir), INPUTS_DIR, key)
 
 
-def _mark_input(output_dir: str, key: Optional[str]) -> None:
+def mark_input(output_dir: str, key: Optional[str]) -> None:
     """Record that every doc of the input keyed ``key`` is committed."""
     if key is not None:
         _touch(input_key_path(output_dir, key))
 
 
-def _read_run(spark: SparkSession, run_path: str) -> DataFrame:
-    """A run directory's lineage columns; the schema spares the
-    schema-inference job a bare ``spark.read.parquet`` launches."""
-    return spark.read.schema(RUN_LINEAGE_SCHEMA).parquet(run_path)
+def _run_files(run_path: str) -> List[str]:
+    """The data files of a run directory: Spark's part files, without its
+    ``_SUCCESS`` marker or its hidden ``.crc`` checksums."""
+    return sorted(
+        e.path for e in os.scandir(run_path)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    )
+
+
+def _run_rows(run_path: str) -> int:
+    """A run directory's row count, read from its parquet footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _run_files(run_path))
 
 
 def read_checkpoint(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
@@ -191,9 +218,11 @@ def write_checkpoint(
 ) -> int:
     """Commit lineage for ONE run by reading back its own partition
     directory (never the whole spans table); returns the run's doc count.
-    A marked run returns its directory count and reads no lineage; an
-    unmarked one appends every row (:func:`pending` anti-joined its docs,
-    and :func:`reconcile_checkpoint` heals a torn append itself).
+    A marked run returns its directory's footer row count and reads no
+    lineage; an unmarked one commits every row as one driver-written file
+    (:func:`_append_lineage`; :func:`pending` anti-joined its docs, and
+    :func:`reconcile_checkpoint` heals a torn append itself). Launches no
+    Spark job: ``spark`` is accepted so existing callers keep working.
 
     Reading the committed files (rather than trusting the in-flight
     DataFrame) makes the checkpoint reflect exactly what is durable — the
@@ -207,58 +236,74 @@ def write_checkpoint(
     if not os.path.isdir(run_path):
         return 0
     if os.path.exists(committed_marker_path(output_dir, run_id)):
-        return _read_run(spark, run_path).count()
-    return _append_lineage(spark, output_dir, run_id, table)
+        return _run_rows(run_path)
+    return _append_lineage(output_dir, run_id, table)
 
 
 def _append_lineage(
-    spark: SparkSession,
-    output_dir: str,
-    run_id: str,
-    table: str,
-    committed: Optional[DataFrame] = None,
+    output_dir: str, run_id: str, table: str, committed=None
 ) -> int:
-    """Append lineage rows for ``run_id``'s directory, minus the doc_ids in
-    ``committed``, then mark the run; returns the rows appended."""
-    run_path = spans_run_path(output_dir, run_id, table)
-    lineage = _read_run(spark, run_path).select(
-        F.lit(run_id).alias("run_id"),
-        "partition_id",
-        "doc_id",
-        "content_hash",
-        F.lit("committed").alias("status"),
-        "span_count",
-        "byte_count",
-        F.current_timestamp().alias("committed_at"),
+    """Commit lineage rows for ``run_id``'s directory, minus the doc_ids in
+    ``committed`` (a pyarrow string array), then mark the run; returns the
+    rows committed.
+
+    The driver reads the directory's lineage columns one part file at a
+    time and streams them, stamped with ``run_id``, ``status`` and one
+    ``committed_at``, into ONE parquet file under ``checkpoint/``
+    (:func:`_publish`): a Spark job would pay its scheduling for a few
+    hundred rows, and the rename makes the append atomic. Driver memory is
+    bounded by one run file's lineage columns plus one row group
+    (``ROW_GROUP_ROWS``), not by the run. A run of no rows writes no file
+    and is only marked."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(CHECKPOINT_SCHEMA)
+    run_schema = to_arrow_schema(RUN_LINEAGE_SCHEMA)
+    committed_at = pa.scalar(
+        datetime.datetime.now(datetime.timezone.utc),
+        schema.field("committed_at").type,
     )
-    if committed is not None:
-        lineage = lineage.join(committed, "doc_id", "left_anti")
-    # the commit count rides the lineage write itself (observe) — the old
-    # `read.parquet(run_path).count()` re-scanned the just-written output a
-    # SECOND time purely to return a number; at production scale that is a
-    # full extra pass over the run's output files
-    obs = Observation(f"ckpt_{run_id}")
-    lineage = lineage.observe(obs, F.count(F.lit(1)).alias("n"))
-    # Lineage rows are ~1% the byte volume of the spans they describe, so a
-    # task-per-spans-file write (the natural read-back partitioning) emits
-    # tiny parquet files and pays ~n_files of task overhead for a near-empty
-    # write. Coalesce to one lineage file per ~6 GB of spans (measured from
-    # the run dir listing — no extra job): 1 file at bench scale, ~O(1000)
-    # at 10^12 docs, and read_checkpoint scans proportionally fewer footers.
-    # coalesce() inserts no shuffle — it collapses the UPSTREAM scan into
-    # n_out tasks too — which is cheap here: parquet column pruning means
-    # those tasks read a few small columns, never the spans payload.
-    try:
-        spans_bytes = sum(
-            e.stat().st_size for e in os.scandir(run_path) if e.is_file()
-        )
-        n_out = max(1, -(-spans_bytes // (6 << 30)))
-        lineage = lineage.coalesce(int(n_out))
-    except OSError:
-        pass  # permission/race on the listing — keep natural partitioning
-    lineage.write.mode("append").parquet(checkpoint_path(output_dir))
+
+    def lineage_tables():
+        for path in _run_files(spans_run_path(output_dir, run_id, table)):
+            part = (
+                pq.ParquetFile(path).read(columns=run_schema.names)
+                .select(run_schema.names).cast(run_schema)
+            )
+            if committed is not None:
+                part = part.filter(
+                    pc.invert(pc.is_in(part["doc_id"], value_set=committed))
+                )
+            n = part.num_rows
+            yield pa.table(
+                {
+                    "run_id": pa.repeat(pa.scalar(run_id), n),
+                    "partition_id": part["partition_id"],
+                    "doc_id": part["doc_id"],
+                    "content_hash": part["content_hash"],
+                    "status": pa.repeat(pa.scalar("committed"), n),
+                    "span_count": part["span_count"],
+                    "byte_count": part["byte_count"],
+                    "committed_at": pa.repeat(committed_at, n),
+                },
+                schema=schema,
+            )
+
+    # zstd at Spark's level 3, dictionaries only on the two constant
+    # columns: on a 270-row run, 7% smaller than dictionaries on every
+    # column and 2% smaller than the file Spark's own append wrote
+    n = _publish(
+        checkpoint_path(output_dir), run_id, schema, lineage_tables(),
+        compression="zstd", compression_level=3,
+        use_dictionary=["run_id", "status"],
+    )
     _mark_committed(output_dir, run_id)
-    return int(obs.get["n"])
+    return n
 
 
 def _runs_on_disk(output_dir: str, table: str = SPANS_DIR) -> List[str]:
@@ -311,18 +356,22 @@ def reconcile_checkpoint(
         run_path = spans_run_path(output_dir, rid, table)
         has_success = os.path.exists(os.path.join(run_path, "_SUCCESS"))
         if rid in committed:
-            # torn lineage append (crash DURING the multi-file commit): the
-            # run dir holds docs its lineage is missing — append exactly
-            # those (anti-joined against the run's committed doc_ids), else
+            # torn lineage append (a crash DURING a multi-file Spark
+            # append, which outputs older than the one-file lineage commit
+            # can hold): the run dir holds docs its lineage is missing —
+            # append exactly those (minus the run's committed doc_ids,
+            # collected here: a legacy run's, at most the run's size), else
             # a resume would re-extract them under a new run_id and
-            # duplicate their rows. Parquet metadata makes the directory
-            # count a footer read. A complete but unmarked run (crash after
-            # the lineage append, before the marker, or lineage older than
-            # markers) is marked.
+            # duplicate their rows. The directory count is a footer read.
+            # A complete but unmarked run (crash after the lineage append,
+            # before the marker, or lineage older than markers) is marked.
             if has_success:
-                if _read_run(spark, run_path).count() > committed[rid]:
-                    done = ckpt.where(F.col("run_id") == rid).select("doc_id")
-                    _append_lineage(spark, output_dir, rid, table, done)
+                if _run_rows(run_path) > committed[rid]:
+                    done = (
+                        ckpt.where(F.col("run_id") == rid).select("doc_id")
+                        .toArrow().column("doc_id").combine_chunks()
+                    )
+                    _append_lineage(output_dir, rid, table, done)
                     adopted.append(rid)
                 else:
                     _mark_committed(output_dir, rid)
@@ -345,16 +394,21 @@ def pending(
     run_ids: Optional[List[str]] = None,
     key: Optional[str] = None,
 ) -> Optional[DataFrame]:
-    """The docs ``run_id`` has left to commit, or None when there are none.
+    """The docs ``run_id`` has left to commit, or None when a marked
+    ``run_id`` has none left.
 
     With ``resume``: reconcile (every run of ``table``, or only ``run_ids``);
     if the input ``key`` (:func:`input_key` of ``docs``) is recorded, stop
-    there, before any Spark job; else anti-join the committed docs, and
-    record ``key`` when none is left. Always: refuse a URI ``output_dir``
-    before anything is written, and a marked ``run_id`` — overwriting its
-    directory with new docs would silently lose docs that lineage still
-    marks committed."""
+    there, before any Spark job; else anti-join the committed docs. A fresh
+    ``run_id`` gets that frame unprobed — it may be empty, which
+    :func:`commit` learns from its write's observed count. Only a marked
+    ``run_id`` is probed: nothing left is a no-op retry (the ``key`` is
+    recorded, None returned); new docs raise, with or without ``resume`` —
+    overwriting its directory with them would silently lose docs that
+    lineage still marks committed. A URI ``output_dir`` is refused before
+    anything is written."""
     _require_local(output_dir)
+    antijoined = False
     if resume:
         reconcile_checkpoint(spark, output_dir, table, run_ids=run_ids)
         if key is not None and os.path.exists(input_key_path(output_dir, key)):
@@ -363,16 +417,17 @@ def pending(
         if ckpt is not None:
             done = ckpt.where(F.col("status") == "committed").select("doc_id")
             docs = docs.join(done, "doc_id", "left_anti")
-            if docs.isEmpty():
-                _mark_input(output_dir, key)
-                return None
-    if os.path.exists(committed_marker_path(output_dir, run_id)):
-        raise ValueError(
-            f"run_id {run_id!r} already has committed lineage rows; "
-            "each run (or retry of an uncommitted run) must reuse the id, "
-            "but new work needs a fresh run_id"
-        )
-    return docs
+            antijoined = True
+    if not os.path.exists(committed_marker_path(output_dir, run_id)):
+        return docs
+    if antijoined and docs.isEmpty():
+        mark_input(output_dir, key)
+        return None
+    raise ValueError(
+        f"run_id {run_id!r} already has committed lineage rows; "
+        "each run (or retry of an uncommitted run) must reuse the id, "
+        "but new work needs a fresh run_id"
+    )
 
 
 def run_stats(run_id: str, n_docs: int, t0: float, metrics: dict) -> dict:
@@ -397,34 +452,88 @@ def commit(
     key: Optional[str] = None,
 ) -> dict:
     """Write ``out`` as ``run_id``'s directory, commit its lineage and
-    append its metrics rows; returns the job stats. The counters ``aggs``
-    ride the write via observe() — no second pass over the data (the
-    reference increments its stats dict per doc, extractor.py:59-66).
-    Once lineage and marker are durable, the input ``key`` is recorded:
-    pass one only when ``out`` holds every doc of the keyed input that
-    :func:`pending` left."""
+    append its metrics rows; returns the job stats. The counters ``aggs``,
+    which must count the rows as ``docs``, ride the write via observe() —
+    no second pass over the data (the reference increments its stats dict
+    per doc, extractor.py:59-66). The write is the commit's only Spark job.
+
+    An empty write (the resume anti-join left nothing) is removed again:
+    it commits no lineage, marker or metrics rows, and returns 0 docs. The
+    directory is this write's own — after reconcile an unmarked id has no
+    run directory. Once lineage and marker are durable, or the write was
+    empty, the input ``key`` is recorded: pass one only when ``out`` holds
+    every doc of the keyed input that :func:`pending` left."""
     obs = Observation(f"{table}_{run_id}")
+    run_path = spans_run_path(output_dir, run_id, table)
     # overwrite makes a mid-write retry of the SAME run idempotent (partial
     # files from the failed attempt are replaced, not appended to)
-    out.observe(obs, *aggs).write.mode("overwrite").parquet(
-        spans_run_path(output_dir, run_id, table)
-    )
+    out.observe(obs, *aggs).write.mode("overwrite").parquet(run_path)
     metrics = dict(obs.get)
+    if not metrics["docs"]:
+        shutil.rmtree(run_path, ignore_errors=True)
+        mark_input(output_dir, key)
+        return run_stats(run_id, 0, t0, {"docs": 0})
     n_docs = write_checkpoint(spark, output_dir, run_id, table)
-    _mark_input(output_dir, key)
+    mark_input(output_dir, key)
     stats = run_stats(run_id, n_docs, t0, metrics)
     _write_metrics(output_dir, run_id, metrics)
     return stats
+
+
+def _row_groups(tables):
+    """Concatenate consecutive pyarrow ``tables`` into row groups of about
+    ``ROW_GROUP_ROWS`` rows: a row group per part file would repeat every
+    column chunk's overhead (+20% bytes on a 270-row run of two files)."""
+    import pyarrow as pa
+
+    buf, rows = [], 0
+    for t in tables:
+        buf.append(t)
+        rows += t.num_rows
+        if rows >= ROW_GROUP_ROWS:
+            yield pa.concat_tables(buf)
+            buf, rows = [], 0
+    if rows:
+        yield pa.concat_tables(buf)
+
+
+def _publish(directory: str, run_id: str, schema, tables, **options) -> int:
+    """Write the pyarrow ``tables`` (in ``schema``) as ONE parquet file of
+    ``run_id`` in ``directory``, written by the driver itself under a
+    hidden temp name and renamed into place, so a crash never leaves a
+    torn file; returns the rows written, and writes no file for none.
+    ``options`` go to the parquet writer. The file carries no copy of the
+    Arrow schema: its readers are Spark, which reads the parquet types."""
+    import pyarrow.parquet as pq
+
+    fname = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
+    # leading dot: Spark's FileIndex skips hidden files, so a crash that
+    # orphans the temp never breaks later reads of the directory
+    tmp = os.path.join(directory, "." + fname + ".tmp")
+    n = 0
+    writer = None
+    try:
+        for t in _row_groups(tables):
+            if writer is None:
+                os.makedirs(directory, exist_ok=True)
+                writer = pq.ParquetWriter(tmp, schema, store_schema=False,
+                                          **options)
+            writer.write_table(t)
+            n += t.num_rows
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is not None:
+        os.replace(tmp, os.path.join(directory, fname))
+    return n
 
 
 def _write_metrics(output_dir: str, run_id: str, metrics: dict) -> None:
     """Append one run's metrics rows (METRICS_SCHEMA layout) to
     ``{output_dir}/metrics`` as one parquet file the driver writes itself:
     the O(1) scalars already live on the driver, and a Spark job would add
-    ~0.4 s of scheduling per run. Write-to-temp + rename keeps a crash from
-    leaving a torn file."""
+    ~0.4 s of scheduling per run."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(METRICS_SCHEMA)
@@ -435,12 +544,5 @@ def _write_metrics(output_dir: str, run_id: str, metrics: dict) -> None:
         ],
         schema=schema,
     )
-    metrics_dir = os.path.join(output_dir, "metrics")
-    os.makedirs(metrics_dir, exist_ok=True)
-    fname = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
-    final = os.path.join(metrics_dir, fname)
-    # leading dot: Spark's FileIndex skips hidden files, so a crash that
-    # orphans the temp never breaks later reads of the directory
-    tmp = os.path.join(metrics_dir, "." + fname + ".tmp")
-    pq.write_table(table, tmp, compression="zstd")
-    os.replace(tmp, final)
+    _publish(os.path.join(output_dir, "metrics"), run_id, schema, [table],
+             compression="zstd")

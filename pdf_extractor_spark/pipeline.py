@@ -70,6 +70,24 @@ SESSION_DEFAULTS = {
 }
 
 
+def driver_memory() -> str:
+    """The driver heap of ``SESSION_DEFAULTS``, capped to the file-size
+    limit. ZGC backs the whole heap with one memory file of the heap's full
+    size, so under a soft ``RLIMIT_FSIZE`` (``ulimit -f``) below the heap
+    the JVM exits at start ("Failed to truncate backing file",
+    ``JAVA_GATEWAY_EXITED``). The cap is the limit rounded down to 64 MB."""
+    import resource
+
+    heap = SESSION_DEFAULTS["spark.driver.memory"]
+    limit, _ = resource.getrlimit(resource.RLIMIT_FSIZE)
+    if limit == resource.RLIM_INFINITY:
+        return heap
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    heap_bytes = int(heap[:-1]) * units[heap[-1].lower()]
+    cap_mb = limit >> 26 << 6
+    return heap if heap_bytes <= cap_mb << 20 else f"{cap_mb}m"
+
+
 def build_session(
     master: Optional[str] = None,
     shuffle_partitions: Optional[int] = None,
@@ -90,6 +108,7 @@ def build_session(
         builder = builder.master(master)
     for k, v in SESSION_DEFAULTS.items():
         builder = builder.config(k, v)
+    builder = builder.config("spark.driver.memory", driver_memory())
     if shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return builder.getOrCreate()
@@ -299,8 +318,9 @@ def run_extraction_job(
     Resumable: rerunning with the same output_dir first reconciles any
     crashed run (partial run dirs removed; durable-but-uncommitted runs
     adopted into lineage — never re-extracted, never duplicated), then
-    anti-joins committed docs. If nothing is left to do the run directory
-    is not touched (a retry after a successful commit must not erase it).
+    anti-joins committed docs. If nothing is left to do, a committed run's
+    directory is not touched (a retry after a successful commit must not
+    erase it), and a fresh run's empty write is removed again.
     A retry over an input file listing that is already committed returns
     before any Spark job (checkpoint.py, "Input keys").
     New docs under a committed ``run_id`` raise, with or without ``resume``
@@ -367,6 +387,11 @@ def run_field_extraction_job(
         key=key,
     )
     if docs is None:
+        return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
+    # pending hands a fresh run id its docs unprobed; the planner's jobs
+    # and the KB swap must not run for nothing, so probe once here
+    if docs.isEmpty():
+        checkpoint.mark_input(output_dir, key)
         return checkpoint.run_stats(run_id, 0, t0, {"docs": 0})
     if kb is None:
         kb = _read_kb_state(spark, output_dir)

@@ -12,7 +12,7 @@ from pdf_extractor_spark.extract.llm import replay_response
 from pdf_extractor_spark.kb import kb_df
 from pdf_extractor_spark.pipeline import run_field_extraction_job
 from pdf_extractor_spark.schema import RAW_DOC_SCHEMA
-from tests.test_resume import _jobs_under_group
+from tests.test_resume import _input_keys, _jobs_under_group, _rewrite_input_file
 
 FIELDS = {"Registro": "55123", "Cidade": "Londrina"}
 
@@ -73,20 +73,45 @@ def test_field_job_end_to_end_with_repair(spark, tmp_path):
 
     # resume: the same input is keyed as committed → a no-op that launches
     # no Spark job and leaves the KB as it was
-    def kb_files():
-        kb_dir = os.path.join(out_dir, "kb")
-        return {(f, os.stat(os.path.join(kb_dir, f)).st_mtime_ns)
-                for f in os.listdir(kb_dir)}
-
-    kb_before = kb_files()
+    kb_before = _kb_files(out_dir)
     s2 = {}
     jobs = _jobs_under_group(spark, "field-noop", lambda: s2.update(
         run_field_extraction_job(spark, docs_path, out_dir, replay=replay,
                                  run_id="r2")))
     assert s2["docs"] == 0
     assert jobs == []
-    assert kb_files() == kb_before
+    assert _kb_files(out_dir) == kb_before
     assert spark.read.parquet(os.path.join(out_dir, "results")).count() == 3
+
+
+def _kb_files(out_dir):
+    kb_dir = os.path.join(out_dir, "kb")
+    return {(f, os.stat(os.path.join(kb_dir, f)).st_mtime_ns)
+            for f in os.listdir(kb_dir)}
+
+
+def test_field_job_rewritten_committed_input_commits_nothing(spark, tmp_path):
+    """A fresh id over a rewritten input whose docs are all committed: the
+    job's one emptiness probe stops it before the planner and the KB swap.
+    It returns 0 docs, leaves the ``kb/`` listing as it was, writes no
+    results directory and records the new input key."""
+    docs_path = str(tmp_path / "docs")
+    out_dir = str(tmp_path / "out")
+    _write_docs(spark, docs_path)
+    replay = {f"card_{i}": replay_response({"registro": "55123"}) for i in range(3)}
+    run_field_extraction_job(spark, docs_path, out_dir, kb=kb_df(spark, BROKEN_KB),
+                             replay=replay, run_id="r1")
+    kb_before = _kb_files(out_dir)
+    keys = _input_keys(out_dir)
+    _rewrite_input_file(docs_path)
+
+    stats = run_field_extraction_job(spark, docs_path, out_dir, replay=replay,
+                                     run_id="r2")
+    assert stats["docs"] == 0
+    assert _kb_files(out_dir) == kb_before
+    assert not os.path.exists(os.path.join(out_dir, "results", "run_id=r2"))
+    assert len(_input_keys(out_dir)) == 2 and keys < _input_keys(out_dir)
+    assert spark.read.parquet(os.path.join(out_dir, "checkpoint")).count() == 3
 
 
 def test_kb_swap_heals_leftover_shelf_with_explicit_kb(spark, tmp_path):

@@ -386,12 +386,13 @@ def test_reused_run_id_whose_dir_is_gone_commits_only_new_docs(spark, tmp_path):
 
 
 def test_fresh_commit_job_budget(spark, tmp_path):
-    """One fresh commit of 40 new docs beside three committed runs: the
-    run-id guard is a marker stat, the lineage append probes nothing and
-    the input and run-dir reads carry their schemas, so the job launches 5
-    Spark jobs (7 with a schema-inference job for each of those two reads,
-    9 more with a lineage scan for the guard and an already-committed
-    probe before the append)."""
+    """One fresh commit of 40 new docs beside three committed runs launches
+    2 Spark jobs: the broadcast of the committed doc_ids for the resume
+    anti-join, and the spans write. The run-id guard is a marker stat, a
+    fresh id's frame is not probed for emptiness (the write's observed
+    count says it), the input read carries its schema, and the driver
+    writes the lineage file from the run directory's files. (Before: 5,
+    with an emptiness probe of 2 jobs and a Spark lineage append.)"""
     _, out_dir = _commit_runs(spark, tmp_path, 3)
     new = _write_shard(spark, tmp_path, "new40", 30, 70, 70)
 
@@ -403,7 +404,7 @@ def test_fresh_commit_job_budget(spark, tmp_path):
 
     jobs = _jobs_under_group(spark, "fresh-commit", run)
     assert stats["docs"] == 40
-    assert len(jobs) == 5
+    assert len(jobs) == 2
 
 
 def _input_keys(out_dir):
@@ -478,6 +479,18 @@ def test_input_key_added_file_commits_only_new_docs(spark, tmp_path):
     assert jobs == []
 
 
+def _rewrite_input_file(docs_path):
+    """Rewrite one parquet file of ``docs_path`` with the same bytes and a
+    later mtime: the same docs under a new input key."""
+    part = sorted(f for f in os.listdir(docs_path) if f.endswith(".parquet"))[0]
+    path = os.path.join(docs_path, part)
+    data = open(path, "rb").read()
+    st = os.stat(path)
+    with open(path, "wb") as fh:
+        fh.write(data)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+
 def test_input_key_rewritten_file_takes_antijoin_path(spark, tmp_path):
     """An input file rewritten with the same doc_ids has a new mtime, so
     the key misses: the retry anti-joins, finds every doc committed,
@@ -486,14 +499,7 @@ def test_input_key_rewritten_file_takes_antijoin_path(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
     keys = _input_keys(out_dir)
-
-    part = sorted(f for f in os.listdir(docs_path) if f.endswith(".parquet"))[0]
-    path = os.path.join(docs_path, part)
-    data = open(path, "rb").read()
-    st = os.stat(path)
-    with open(path, "wb") as fh:
-        fh.write(data)
-    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    _rewrite_input_file(docs_path)
 
     stats, jobs = _retry(spark, docs_path, out_dir, "r2")
     assert stats["docs"] == 0
@@ -557,3 +563,155 @@ def test_uri_output_dir_rejected_before_any_write(spark, tmp_path, monkeypatch, 
         run_stream_extraction(spark, docs_path, out)
     assert not (tmp_path / "out").exists()
     assert os.listdir(cwd) == []
+
+
+def _lineage_files(out_dir):
+    """The lineage files Spark lists (hidden and ``_`` names skipped)."""
+    from pdf_extractor_spark.checkpoint import checkpoint_path
+
+    return sorted(
+        f for f in os.listdir(checkpoint_path(out_dir))
+        if not f.startswith(("_", "."))
+    )
+
+
+def test_fresh_id_with_nothing_pending_commits_nothing(spark, tmp_path):
+    """A fresh id over a rewritten input whose docs are all committed: the
+    unprobed anti-joined frame writes an empty run directory, which the
+    commit removes again. It returns 0 docs, records the input key, and
+    adds no lineage, marker or metrics rows."""
+    from pdf_extractor_spark.checkpoint import (
+        committed_marker_path, read_checkpoint, spans_run_path,
+    )
+
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 30, 30)
+    out_dir = str(tmp_path / "out")
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    keys = _input_keys(out_dir)
+    files = _lineage_files(out_dir)
+    metrics = spark.read.parquet(os.path.join(out_dir, "metrics")).count()
+    _rewrite_input_file(docs_path)
+
+    stats, _ = _retry(spark, docs_path, out_dir, "r2")
+    assert stats["docs"] == 0
+    assert not os.path.exists(spans_run_path(out_dir, "r2"))
+    assert not os.path.exists(committed_marker_path(out_dir, "r2"))
+    assert len(_input_keys(out_dir)) == 2 and keys < _input_keys(out_dir)
+    assert _lineage_files(out_dir) == files
+    assert read_checkpoint(spark, out_dir).count() == 30
+    assert spark.read.parquet(os.path.join(out_dir, "metrics")).count() == metrics
+
+    stats, jobs = _retry(spark, docs_path, out_dir, "r3")
+    assert stats["docs"] == 0
+    assert jobs == []
+
+
+def test_crash_before_empty_write_removed_adopts_zero_rows(spark, tmp_path):
+    """A crash between an empty write and its removal leaves a run
+    directory holding only ``_SUCCESS``. The next resume adopts it with 0
+    rows (marked, no lineage file) and commits each new doc exactly once."""
+    from pdf_extractor_spark.checkpoint import (
+        committed_marker_path, read_checkpoint, spans_run_path,
+    )
+
+    out_dir = str(tmp_path / "out")
+    first = _write_shard(spark, tmp_path, "first", 0, 20, 30)
+    run_extraction_job(spark, first, out_dir, run_id="r1", partitions=2)
+    empty = spans_run_path(out_dir, "r2")
+    os.makedirs(empty)
+    open(os.path.join(empty, "_SUCCESS"), "wb").close()
+    files = _lineage_files(out_dir)
+
+    every = _write_shard(spark, tmp_path, "every", 0, 30, 30)
+    s = run_extraction_job(spark, every, out_dir, run_id="r3", partitions=2)
+    assert s["docs"] == 10
+    assert os.path.isfile(committed_marker_path(out_dir, "r2"))
+    assert len(_lineage_files(out_dir)) == len(files) + 1  # r3's only
+    ckpt = read_checkpoint(spark, out_dir)
+    assert ckpt.count() == 30
+    assert ckpt.select("doc_id").distinct().count() == 30
+    assert ckpt.where(F.col("run_id") == "r2").count() == 0
+    spans = spark.read.parquet(os.path.join(out_dir, "spans"))
+    assert spans.count() == 30
+    assert spans.select("doc_id").distinct().count() == 30
+
+    s = run_extraction_job(spark, every, out_dir, run_id="r4", partitions=2)
+    assert s["docs"] == 0
+
+
+def test_stray_lineage_temp_is_invisible(spark, tmp_path):
+    """A crash mid lineage write leaves a torn ``checkpoint/.part-*.tmp``.
+    Lineage readers and reconcile (made to read lineage by removing a
+    marker) skip it, and the next run commits each doc exactly once."""
+    from pdf_extractor_spark.checkpoint import (
+        checkpoint_path, committed_marker_path, read_checkpoint,
+        reconcile_checkpoint,
+    )
+
+    out_dir = str(tmp_path / "out")
+    first = _write_shard(spark, tmp_path, "first", 0, 20, 30)
+    run_extraction_job(spark, first, out_dir, run_id="r1", partitions=2)
+    ckpt_dir = checkpoint_path(out_dir)
+    (done,) = _lineage_files(out_dir)
+    torn = open(os.path.join(ckpt_dir, done), "rb").read()
+    stray = os.path.join(ckpt_dir, ".part-r2-dead.parquet.tmp")
+    with open(stray, "wb") as fh:
+        fh.write(torn[: len(torn) // 2])
+
+    assert read_checkpoint(spark, out_dir).count() == 20
+    os.remove(committed_marker_path(out_dir, "r1"))
+    assert reconcile_checkpoint(spark, out_dir) == []
+    assert os.path.isfile(committed_marker_path(out_dir, "r1"))
+
+    every = _write_shard(spark, tmp_path, "every", 0, 30, 30)
+    s = run_extraction_job(spark, every, out_dir, run_id="r2", partitions=2)
+    assert s["docs"] == 10
+    ckpt = read_checkpoint(spark, out_dir)
+    assert ckpt.count() == 30
+    assert ckpt.select("doc_id").distinct().count() == 30
+    assert os.path.isfile(stray)
+
+
+def test_spark_and_driver_lineage_files_read_together(spark, tmp_path):
+    """A checkpoint holding a Spark-written lineage file (INT96
+    ``committed_at``, as older outputs have) and a driver-written one
+    (INT64 microseconds, UTC) reads through ``CHECKPOINT_SCHEMA`` with
+    every timestamp intact."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from pdf_extractor_spark.checkpoint import checkpoint_path, read_checkpoint
+    from pdf_extractor_spark.schema import CHECKPOINT_SCHEMA
+
+    out_dir = str(tmp_path / "out")
+    ckpt_dir = checkpoint_path(out_dir)
+    legacy_at = datetime.datetime(2024, 1, 2, 3, 4, 5, 678000)
+    spark.createDataFrame(
+        [("old", 0, f"legacy_{i}", "h", "committed", 1, 10, legacy_at)
+         for i in range(5)],
+        CHECKPOINT_SCHEMA,
+    ).coalesce(1).write.parquet(ckpt_dir)
+    (spark_file,) = _lineage_files(out_dir)
+
+    docs_path = _write_shard(spark, tmp_path, "docs", 0, 10, 10)
+    before = datetime.datetime.now().replace(microsecond=0)
+    run_extraction_job(spark, docs_path, out_dir, run_id="r1", partitions=2)
+    after = datetime.datetime.now()
+    (driver_file,) = set(_lineage_files(out_dir)) - {spark_file}
+
+    def physical(name):
+        meta = pq.ParquetFile(os.path.join(ckpt_dir, name)).metadata
+        col = meta.schema.names.index("committed_at")
+        return meta.row_group(0).column(col).physical_type
+
+    assert physical(spark_file) == "INT96"
+    assert physical(driver_file) == "INT64"
+    at = {
+        r["run_id"]: r["ts"]
+        for r in read_checkpoint(spark, out_dir).groupBy("run_id")
+        .agg(F.min("committed_at").alias("ts")).collect()
+    }
+    assert at["old"] == legacy_at
+    assert before <= at["r1"] <= after
+    assert read_checkpoint(spark, out_dir).count() == 15
